@@ -270,18 +270,13 @@ def main() -> None:
         f.write("\n")
     with open(os.path.join(here, "BENCH_HISTORY.jsonl"), "a") as f:
         f.write(json.dumps(full, separators=(",", ":")) + "\n")
-    # compact separators keep the driver-parsed line as small as the
-    # contract allows (the bounded tail was cutting the pretty form)
-    print(json.dumps(out, separators=(",", ":")))
-    # Tail-survivable compact record (VERDICT r14 'what's wrong' 1 /
-    # next-round item 1): the full line above is ~6 KB (149-query map)
-    # and a bounded tail capture decapitated it in BOTH the r12 and r13
-    # artifacts, costing PERF its per-query round-over-round two rounds
-    # running. This final line is ~200 bytes — whatever tail the driver
-    # keeps always ends with a parseable record carrying the headline
-    # total + the commit anchor. Marked "compact" and carrying the SAME
-    # metric/value as the full line; consumers that want per-query data
-    # parse the full line (or BENCH_FULL_latest.json / BENCH_HISTORY).
+    # The compact record (~200 bytes: headline total + commit anchor,
+    # marked "compact") goes first, the full one-line result (~6 KB,
+    # the per-query map) last: a consumer that parses the final line
+    # gets the per-query data, and one that keeps only a bounded tail
+    # still finds the compact record or the complete copies in
+    # BENCH_FULL_latest.json / BENCH_HISTORY.jsonl. Compact separators
+    # keep both lines as small as the contract allows.
     compact = {
         "metric": out["metric"],
         "value": out["value"],
@@ -294,6 +289,7 @@ def main() -> None:
         "compact": True,
     }
     print(json.dumps(compact, separators=(",", ":")))
+    print(json.dumps(out, separators=(",", ":")))
 
 
 def _git_state(repo_dir: str) -> tuple[str, bool]:

@@ -8,13 +8,18 @@ embeddings (``transE/model.py:78-151``).
 
 Spark-first split of responsibilities (SURVEY M2):
  * **Spark** builds the triples DataFrame (operators/graph.py
-   ``triples``), indexes entities/relations to dense ints
-   (``row_number`` over a sorted distinct — deterministic), and joins
-   the learned embeddings back to users/items with zero-fill for
-   entities missing from training (M3, ``transE/model.py:111-135``);
+   ``triples``) and joins the learned embeddings back to users/items
+   with zero-fill for entities missing from training (M3,
+   ``transE/model.py:111-135``);
  * **the driver** runs the actual SGD — the one deliberately
    non-distributed stage, exactly like the reference's
-   pykeen-on-one-GPU step.  pykeen/torch are not available here, so
+   pykeen-on-one-GPU step.  The driver trainer executes the triple
+   lineage once: the string triples come over in one Arrow collect
+   (:func:`collect_triples`, guarded by ``MAX_DRIVER_TRIPLES``) and
+   are indexed there — entity/relation ids are the ranks of the
+   sorted distinct names, the same ids :func:`index_entities` assigns
+   in Spark for the partitioned and sharded trainers, whose triples
+   never leave the cluster.  pykeen/torch are not available here, so
    the 9 published scoring functions are implemented directly in
    numpy (margin ranking loss + uniform negative sampling — Bordes
    et al. 2013 and successors).  Parity target is metric-band, not
@@ -32,6 +37,8 @@ RotatE/ComplEx embeddings are complex; following the reference's
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -63,10 +70,11 @@ def index_entities(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ents, rels
 
 
-# Driver-collect ceiling for the single-node SGD stage: 3 int64s/row
-# -> 50M triples ~ 1.2 GB plus Row overhead, the most a driver JVM/
-# Python pair comfortably holds. Beyond it, fail fast with the scale
-# path spelled out rather than OOM-ing the driver mid-collect.
+# Driver-collect ceiling for the single-node SGD stage. The triples
+# arrive as Arrow string columns, ~3 short strings per row: 50M triples
+# is a few GB on the driver, the most a driver JVM/Python pair
+# comfortably holds. Beyond it, fail fast with the scale path spelled
+# out rather than OOM-ing the driver mid-collect.
 MAX_DRIVER_TRIPLES = 50_000_000
 
 
@@ -74,9 +82,9 @@ def indexed_triples_df(
     triples: DataFrame, ents: DataFrame, rels: DataFrame
 ) -> DataFrame:
     """(h, r, t) dense-int triple DataFrame — the distributed form of
-    the training input. Stays on the cluster; both the driver-collect
-    stage (:func:`collect_indexed_triples`) and the partitioned trainer
-    (:func:`train_kge_partitioned`) start from it.
+    the training input for the partitioned and sharded trainers
+    (:func:`train_kge_partitioned`, :func:`train_kge_sharded`). Stays
+    on the cluster.
     """
     return (
         triples.join(ents.withColumnRenamed("e", "head"), "head")
@@ -89,42 +97,65 @@ def indexed_triples_df(
     )
 
 
-def collect_indexed_triples(
-    triples: DataFrame,
-    ents: DataFrame,
-    rels: DataFrame,
-    max_triples: int = MAX_DRIVER_TRIPLES,
-) -> np.ndarray:
-    """(n, 3) int array of (h_idx, r_idx, t_idx) — the driver-side
-    hand-off to the single-node training stage (mirrors the reference's
-    pykeen step, framework/recommender/transE/model.py).
+def _sorted_codes(values: pa.ChunkedArray) -> tuple[pa.Array, np.ndarray]:
+    """(sorted distinct values, each value's position among them).
+    Arrow sorts strings by their UTF-8 bytes, Spark's string order, so
+    the positions are the ids ``index_entities`` assigns."""
+    names = pc.unique(values)
+    names = names.take(pc.array_sort_indices(names))
+    return names, pc.index_in(values, value_set=names).to_numpy()
 
-    Guarded: counts before collecting and raises if the triple set
-    exceeds ``max_triples`` — the single-node SGD stage is for
-    reference-scale graphs. At 100 TB, use :func:`train_kge_sharded`
-    instead: triples AND parameters stay DataFrames (per-partition
-    local SGD over equi-joined parameter slices, deltas summed and
-    joined back Spark-side) — nothing parameter-sized touches the
-    driver; :func:`train_kge_partitioned` is the mid-tier (parameters
-    driver-held). Scoring downstream is unchanged either way — it
-    only needs the final entity-vector DataFrame.
+
+def collect_triples(
+    triples: DataFrame, max_triples: int = MAX_DRIVER_TRIPLES
+) -> tuple[np.ndarray, pa.Array, pa.Array]:
+    """The driver-side hand-off to the single-node training stage
+    (mirrors the reference's pykeen step,
+    framework/recommender/transE/model.py): ``(idx, entities,
+    relations)`` where ``idx`` is the (n, 3) int64 array of
+    (h_idx, r_idx, t_idx) in the frame's own row order and
+    ``entities``/``relations`` are the sorted distinct names, so
+    ``entities[i]`` is the entity with id ``i``.
+
+    The triple lineage runs once: the frame is persisted for the call,
+    counted, collected as Arrow string columns from the cache, and
+    indexed here with the ids :func:`index_entities` would assign.
+    Triples with a null head, relation or tail are dropped, as the
+    inner joins of :func:`indexed_triples_df` drop them.
+
+    Guarded: raises before any collect if the triple set exceeds
+    ``max_triples`` — the single-node SGD stage is for reference-scale
+    graphs. At 100 TB, use :func:`train_kge_sharded` instead: triples
+    AND parameters stay DataFrames (per-partition local SGD over
+    equi-joined parameter slices, deltas summed and joined back
+    Spark-side) — nothing parameter-sized touches the driver;
+    :func:`train_kge_partitioned` is the mid-tier (parameters
+    driver-held). Scoring downstream is unchanged either way — it only
+    needs the final entity-vector DataFrame.
     """
-    idx = indexed_triples_df(triples, ents, rels)
-    n = idx.count()
-    if n > max_triples:
-        raise ValueError(
-            f"refusing to collect {n:,} triples to the driver "
-            f"(cap {max_triples:,}): the single-node KGE SGD stage is for "
-            "reference-scale graphs. For larger graphs use "
-            "train_kge_sharded (KGERecommender(trainer='sharded')): the "
-            "triples AND the parameter tables live on the cluster — "
-            "nothing parameter-sized ever touches the driver; "
-            "trainer='partitioned' is the mid-tier (triples stay "
-            "distributed, parameters driver-held). The resulting entity "
-            "vectors feed the unchanged scoring path either way."
-        )
-    rows = idx.collect()
-    return np.array([[r.h, r.r, r.t] for r in rows], dtype=np.int64)
+    t = triples.select("head", "relation", "tail").na.drop().persist()
+    try:
+        n = t.count()
+        if n > max_triples:
+            raise ValueError(
+                f"refusing to collect {n:,} triples to the driver "
+                f"(cap {max_triples:,}): the single-node KGE SGD stage is for "
+                "reference-scale graphs. For larger graphs use "
+                "train_kge_sharded (KGERecommender(trainer='sharded')): the "
+                "triples AND the parameter tables live on the cluster — "
+                "nothing parameter-sized ever touches the driver; "
+                "trainer='partitioned' is the mid-tier (triples stay "
+                "distributed, parameters driver-held). The resulting entity "
+                "vectors feed the unchanged scoring path either way."
+            )
+        tbl = t.toArrow()
+    finally:
+        t.unpersist()
+    heads, tails = tbl.column("head"), tbl.column("tail")
+    ents, e = _sorted_codes(pa.chunked_array(heads.chunks + tails.chunks, heads.type))
+    rels, r = _sorted_codes(tbl.column("relation"))
+    idx = np.stack([e[:n], r, e[n:]], axis=1).astype(np.int64)
+    return idx, ents, rels
 
 
 # ------------------------------------------------------------ numpy models
@@ -1232,6 +1263,13 @@ def embeddings_to_df(
     return ents.join(vdf, "idx").select("e", "vec")
 
 
+def named_embeddings_df(spark, model: _KGEModel, names: pa.Array) -> DataFrame:
+    """M4 for the driver trainer: (e, vec) straight from the driver-side
+    entity names (``names[i]`` is entity ``i``), no id join."""
+    rows = list(zip(names.to_pylist(), model.entity_vectors().tolist()))
+    return spark.createDataFrame(rows, "e string, vec array<double>")
+
+
 class KGERecommender(Recommender):
     """Any-of-9 KGE model + shared cosine top-k scoring path.
 
@@ -1259,9 +1297,10 @@ class KGERecommender(Recommender):
         self.n_negatives = n_negatives
         self.adversarial_alpha = adversarial_alpha
         assert scoring in ("exact", "lsh", "broadcast"), scoring
-        # "driver" = reference-parity single-node SGD (triples collect,
-        # guarded); "partitioned" = distributed partition-wise SGD —
-        # triples never leave the cluster (train_kge_partitioned);
+        # "driver" = reference-parity single-node SGD (one guarded
+        # Arrow collect of the string triples, indexed on the driver —
+        # collect_triples); "partitioned" = distributed partition-wise
+        # SGD — triples never leave the cluster (train_kge_partitioned);
         # "sharded" = partitioned SGD with the parameter tables ALSO
         # kept as a DataFrame across epochs (train_kge_sharded — the
         # 100 TB path where even the entity table outgrows the driver)
@@ -1286,14 +1325,19 @@ class KGERecommender(Recommender):
         )
         if extra_triples is not None:
             triples = triples.unionByName(extra_triples.select("head", "relation", "tail"))
-        ents, rels = index_entities(triples)
-        ents, rels = ents.persist(), rels.persist()
         hyper = dict(
             model=self.model_name, dim=self.dim, epochs=self.epochs,
             lr=self.lr, margin=self.margin, seed=self.seed,
             n_negatives=self.n_negatives,
             adversarial_alpha=self.adversarial_alpha,
         )
+        if self.trainer == "driver":
+            idx, ent_names, rel_names = collect_triples(triples)
+            m = train_kge(idx, len(ent_names), len(rel_names), **hyper)
+            self._emb = named_embeddings_df(spark, m, ent_names).persist()
+            return self
+        ents, rels = index_entities(triples)
+        ents, rels = ents.persist(), rels.persist()
         if self.trainer == "sharded":
             params = train_kge_sharded(
                 indexed_triples_df(triples, ents, rels),
@@ -1303,15 +1347,11 @@ class KGERecommender(Recommender):
             evec = sharded_entity_embeddings(params, self.model_name)
             self._emb = ents.join(evec, "idx").select("e", "vec").persist()
             return self
-        if self.trainer == "partitioned":
-            m = train_kge_partitioned(
-                indexed_triples_df(triples, ents, rels),
-                ents.count(), rels.count(),
-                n_partitions=self.n_partitions, **hyper,
-            )
-        else:
-            idx = collect_indexed_triples(triples, ents, rels)
-            m = train_kge(idx, ents.count(), rels.count(), **hyper)
+        m = train_kge_partitioned(
+            indexed_triples_df(triples, ents, rels),
+            ents.count(), rels.count(),
+            n_partitions=self.n_partitions, **hyper,
+        )
         self._emb = embeddings_to_df(spark, m, ents).persist()
         return self
 

@@ -165,8 +165,10 @@ def _item_dedup_clusters(items: DataFrame, spec: dict) -> DataFrame:
 
 
 def _folds(ratings: DataFrame, split_cfg: dict, items: DataFrame | None = None):
-    """Split spec -> list of (train, test) lineage filters. The
-    optional validation sub-split (SP8) is carved out of each train."""
+    """Split spec -> (split_df, list of (train, test) lineage filters).
+    Every fold filters the one persisted ``split_df``; the caller
+    unpersists it once the folds are done. The optional validation
+    sub-split (SP8) is carved out of each train."""
     seed = split_cfg.get("seed", 42)
     spec = dict(split_cfg["test"])
     method = spec.pop("method")
@@ -229,35 +231,20 @@ def _folds(ratings: DataFrame, split_cfg: dict, items: DataFrame | None = None):
             v = SP.validation_subsplit(train, method=vmethod, seed=seed + 1, **vspec)
             out.append((v.filter(~F.col("is_test")).drop("is_test"), test))
         pairs = out
-    return pairs
+    return split_df, pairs
 
 
-def run_experiment(spark: SparkSession, config) -> dict:
-    """Execute a full experiment; returns {model: {column: value}} as
-    written to the report CSV."""
-    exp = load_config(config)["experiment"]
-
-    ratings, graph, items = _load_dataset(spark, exp["dataset"])
-    for step in exp.get("preprocess", []) or []:
-        fn = PREPROCESS[step["method"]]
-        ratings = fn(ratings, **step.get("parameters", {}))
-    ratings = ratings.persist()
-
-    pairs = _folds(ratings, exp["split"], items=items)
-
-    ev = exp["evaluation"]
-    k = ev.get("k", 5)
-    threshold = ev.get("relevance_threshold", 0)
-    metric_names = list(ev.get("metrics", ["MAP", "nDCG"]))
-    seed = exp["split"].get("seed", 42)
-
+def _run_models(models: list[dict], pairs, graph: KGraph, k: int,
+                metric_names: list[str], threshold: float, seed: int):
+    """Train and score every model on every fold -> ({model: per-fold
+    metric values}, {model: per-fold seconds})."""
     extra_edges = kg_extra_edges(graph)
     extra_triples = kg_extra_triples(graph)
     item_entities = kg_item_entities(graph)
 
     results: dict[str, list[list[float]]] = {}
     times: dict[str, list[float]] = {}
-    for i_model, mcfg in enumerate(exp["models"]):
+    for i_model, mcfg in enumerate(models):
         name = mcfg["name"]
         params = mcfg.get("parameters", {}) or {}
         display = name if name not in results else f"{name}#{i_model}"
@@ -290,22 +277,55 @@ def run_experiment(spark: SparkSession, config) -> dict:
                 F.col("user_id").cast("string").alias("user_id"),
                 F.col("item_id").cast("string").alias("item_id"),
                 "rank",
-            )
+            ).persist()
             test_m = test.select(
                 F.col("user_id").cast("string").alias("user_id"),
                 F.col("item_id").cast("string").alias("item_id"),
                 F.col("rating").cast("double").alias("rating"),
             )
-            fold_vals = [
-                float(
-                    METRICS[m](test_m, recs, k, relevance_threshold=threshold)
-                    .collect()[0]["value"]
-                    or 0.0
-                )
-                for m in metric_names
-            ]
+            # the recs stay cached across the metrics, so the scoring
+            # lineage runs once; released even when a metric fails
+            try:
+                fold_vals = [
+                    float(
+                        METRICS[m](test_m, recs, k, relevance_threshold=threshold)
+                        .collect()[0]["value"]
+                        or 0.0
+                    )
+                    for m in metric_names
+                ]
+            finally:
+                recs.unpersist()
             results[display].append(fold_vals)
             times[display].append(time.monotonic() - t0)
+    return results, times
+
+
+def run_experiment(spark: SparkSession, config) -> dict:
+    """Execute a full experiment; returns {model: {column: value}} as
+    written to the report CSV."""
+    exp = load_config(config)["experiment"]
+
+    ratings, graph, items = _load_dataset(spark, exp["dataset"])
+    for step in exp.get("preprocess", []) or []:
+        fn = PREPROCESS[step["method"]]
+        ratings = fn(ratings, **step.get("parameters", {}))
+    ratings = ratings.persist()
+    ev = exp["evaluation"]
+    k = ev.get("k", 5)
+    metric_names = list(ev.get("metrics", ["MAP", "nDCG"]))
+    split_df = None
+    try:
+        split_df, pairs = _folds(ratings, exp["split"], items=items)
+        results, times = _run_models(
+            exp["models"], pairs, graph, k, metric_names,
+            threshold=ev.get("relevance_threshold", 0),
+            seed=exp["split"].get("seed", 42),
+        )
+    finally:
+        if split_df is not None:
+            split_df.unpersist()
+        ratings.unpersist()
 
     if "report" in exp:
         # report columns carry the cutoff like the reference's

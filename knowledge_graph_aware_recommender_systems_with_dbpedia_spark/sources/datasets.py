@@ -100,8 +100,8 @@ class DatasetAdapter:
         else:
             raise ValueError("map_URIs needs an offline labels DataFrame or a fetch callable")
         out = mapped.select("item_id", "URI")
-        n = out.count()
-        matched = out.filter(F.col("URI").isNotNull()).count()
+        # one aggregate, so the link lineage runs once for the print
+        n, matched = out.agg(F.count(F.lit(1)), F.count("URI")).first()
         print(f"{self.name}: matched {matched}/{n} items")  # A5 invariant print
         return self._write(out, "map.csv")
 

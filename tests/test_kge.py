@@ -78,20 +78,135 @@ def test_kge_recommender_end_to_end(spark):
     assert overlap == 0
 
 
-@pytest.mark.slow
-def test_collect_triples_guard_fails_fast(spark):
+def _triples(spark, rows, n_slices=None):
+    schema = "head string, relation string, tail string"
+    if n_slices is None:
+        return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, n_slices), schema)
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_collect_triples_guard_fails_fast(spark, monkeypatch):
     """An oversized triple set must raise the actionable cap error
-    BEFORE any driver collect, not OOM mid-collect."""
-    t = spark.createDataFrame(
-        [("u:1", "r", "i:1"), ("u:2", "r", "i:2"), ("u:3", "r", "i:1")],
-        "head string, relation string, tail string",
-    )
-    ents, rels = kge.index_entities(t)
-    with pytest.raises(ValueError, match="refusing to collect"):
-        kge.collect_indexed_triples(t, ents, rels, max_triples=2)
+    BEFORE any driver collect, not OOM mid-collect — and release the
+    frame it persisted for the count either way."""
+    from pyspark.sql import DataFrame
+
+    t = _triples(spark, [("u:1", "r", "i:1"), ("u:2", "r", "i:2"), ("u:3", "r", "i:1")])
+    cached = _persisted_rdds(spark)
+
+    def no_collect(self):
+        raise AssertionError("collected before the size guard")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "toArrow", no_collect)
+        with pytest.raises(ValueError, match="refusing to collect"):
+            kge.collect_triples(t, max_triples=2)
+    assert _persisted_rdds(spark) == cached
     # under the cap: normal hand-off
-    idx = kge.collect_indexed_triples(t, ents, rels, max_triples=10)
-    assert idx.shape == (3, 3)
+    idx, ents, rels = kge.collect_triples(t, max_triples=10)
+    assert idx.shape == (3, 3) and idx.dtype == np.int64
+    assert ents.to_pylist() == ["i:1", "i:2", "u:1", "u:2", "u:3"]
+    assert rels.to_pylist() == ["r"]
+    assert _persisted_rdds(spark) == cached
+
+
+def test_collect_triples_ids_match_index_entities(spark):
+    """Driver-side ids are the Spark-side ids: Arrow's byte-order sort
+    is Spark's UTF-8 binary string order. U+FF21 sorts before U+1F600
+    in code-point (UTF-8) order but after it in UTF-16 order, so the
+    fixture pins the encoding the order follows."""
+    t = _triples(spark, [
+        ("u:1", "rating5", "i:Amélie"),
+        ("u:2", "rating4", "i:Zoë"),
+        ("p:\uff21", "has", "i:Amélie"),
+        ("u:1", "is", "p:\U0001f600"),
+        ("u:10", "rating5", "i:abc"),
+        ("i:abc", "has", "p:Ångström"),
+        ("u:2", "rating3", "i:Amélie"),
+    ])
+    _, names, rel_names = kge.collect_triples(t)
+    ents, rels = kge.index_entities(t)
+    assert {r.e: r.idx for r in ents.collect()} == {
+        n: i for i, n in enumerate(names.to_pylist())
+    }
+    assert {r.r: r.idx for r in rels.collect()} == {
+        n: i for i, n in enumerate(rel_names.to_pylist())
+    }
+    assert names.to_pylist().index("p:\uff21") < names.to_pylist().index("p:\U0001f600")
+
+
+def test_collect_triples_rows_match_indexed_triples_df(spark):
+    """Row for row, the (h, r, t) hand-off equals the Spark-side
+    indexed_triples_df collect on a multi-partition input, when the id
+    tables are broadcast and the triples stream through the joins in
+    partition order (the plan of the driver trainer's former collect)."""
+    rng = np.random.default_rng(5)
+    rows = [
+        (f"u:{rng.integers(40)}", f"rating{rng.integers(1, 6)}", f"i:{rng.integers(60)}")
+        for _ in range(300)
+    ]
+    t = _triples(spark, rows, n_slices=3).unionByName(
+        _triples(spark, [(f"i:{i}", "has", f"p:g{i % 7}") for i in range(60)], n_slices=2)
+    )
+    assert t.rdd.getNumPartitions() > 1
+    idx, _, _ = kge.collect_triples(t)
+    ents, rels = kge.index_entities(t)
+    joined = kge.indexed_triples_df(t, F.broadcast(ents), F.broadcast(rels))
+    old = np.array([[r.h, r.r, r.t] for r in joined.collect()], dtype=np.int64)
+    assert np.array_equal(idx, old)
+
+
+def test_collect_triples_drops_null_triples(spark):
+    """A null head, relation or tail drops the triple, as the inner
+    joins of indexed_triples_df drop it."""
+    rows = [
+        ("u:1", "r", "i:1"),
+        (None, "r", "i:2"),
+        ("u:2", None, "i:2"),
+        ("u:3", "r", None),
+        ("u:2", "r", "i:1"),
+    ]
+    t = _triples(spark, rows)
+    idx, names, rel_names = kge.collect_triples(t)
+    names, rel_names = names.to_pylist(), rel_names.to_pylist()
+    got = [(names[h], rel_names[r], names[tl]) for h, r, tl in idx]
+    assert got == [("u:1", "r", "i:1"), ("u:2", "r", "i:1")]
+    ents, rels = kge.index_entities(t)
+    assert kge.indexed_triples_df(t, ents, rels).count() == len(idx)
+
+
+def test_driver_train_runs_no_dense_id_jobs(spark, monkeypatch):
+    """train(trainer='driver') executes the triple lineage once and
+    indexes on the driver: no sampled_boundaries collect, no bucketed
+    rank, only a handful of Spark jobs."""
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators import ids
+
+    def no_boundaries(*a, **k):
+        raise AssertionError("driver trainer ran the Spark-side dense-id jobs")
+
+    monkeypatch.setattr(ids, "sampled_boundaries", no_boundaries)
+    ratings = spark.createDataFrame(
+        [(u, i, float(1 + (u + i) % 5)) for u in range(12) for i in range(u % 4, 20, 3)],
+        "user_id int, item_id int, rating double",
+    )
+    sc = spark.sparkContext
+    group = "test_driver_train_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rec = kge.KGERecommender("transe", k=3, dim=4, epochs=1, seed=3).train(ratings)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # the count that fills the cache + the Arrow collect from it
+    assert 1 <= len(jobs) <= 4, len(jobs)
+    assert rec._emb.count() == 12 + 20
+    rec._train.unpersist()
+    rec._emb.unpersist()
 
 
 @pytest.mark.slow

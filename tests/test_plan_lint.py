@@ -123,7 +123,7 @@ def test_fold_lineages_share_cached_split_scan(spark):
     from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.plans.experiment import _folds
 
     ratings = _ratings(spark, SF)
-    pairs = _folds(ratings, {"seed": 42, "test": {"method": "k_fold", "k": 3, "level": "global"}})
+    _, pairs = _folds(ratings, {"seed": 42, "test": {"method": "k_fold", "k": 3, "level": "global"}})
     assert len(pairs) == 3
     try:
         for train, test in pairs:

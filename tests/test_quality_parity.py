@@ -82,7 +82,7 @@ def test_node2vec_fold_metrics_in_reference_band(spark, clone_dir):
     ratings = PREPROCESS["filter_kcore"](
         ratings, **exp["preprocess"][0]["parameters"]
     ).persist()
-    pairs = _folds(ratings, exp["split"])
+    _, pairs = _folds(ratings, exp["split"])
     assert len(pairs) == 5
     train, test = pairs[0]
     model = MODELS["deepwalk_based"](exp["models"][0]["parameters"], 42)
