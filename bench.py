@@ -176,7 +176,10 @@ HEADLINE = [
 
 
 def main() -> None:
-    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.session import get_spark
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.session import (
+        codegen_compiles,
+        get_spark,
+    )
     from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.plans import QUERIES
 
     spark = get_spark("bench")
@@ -197,16 +200,23 @@ def main() -> None:
     )
 
     times: dict[str, float] = {}
+    # Janino compiles per query: the first run's, then the later
+    # repeats' — a warm repeat that compiles again missed the
+    # generated-class cache (see session.get_spark)
+    compiles: dict[str, list[int]] = {}
     for name in HEADLINE:
         fn = QUERIES[name]
         runs: list[float] = []
         n = -1
         memo0 = _dq.memo_stats()
+        c0 = codegen_compiles(spark)
         for i in range(repeats):
             t0 = time.time()
             df = fn(spark, SF_DIR)
             prev, n = n, df.count()
             runs.append(time.time() - t0)
+            if i == 0:
+                c1 = codegen_compiles(spark)
             # a timing sample of a query that returned a different row
             # count than its previous repeat is measuring a different
             # computation — fail loudly instead of medianing it in
@@ -216,6 +226,7 @@ def main() -> None:
                 "— nondeterministic query in the bench battery"
             )
         times[name] = round(statistics.median(runs), 3)
+        compiles[name] = [c1 - c0, codegen_compiles(spark) - c1]
         detail = "/".join(f"{r:.2f}" for r in runs)
         memo1 = _dq.memo_stats()
         memo = ""
@@ -225,7 +236,8 @@ def main() -> None:
                 f" memo_hits={memo1['hits'] - memo0['hits']}"
             )
         print(
-            f"# {name}: median {times[name]}s of [{detail}] rows={n}{memo}",
+            f"# {name}: median {times[name]}s of [{detail}] rows={n}"
+            f" compiles={compiles[name][0]}+{compiles[name][1]}{memo}",
             file=sys.stderr,
         )
     # battery-end memo hygiene: unpersist + drop the shared fragments so
@@ -252,6 +264,7 @@ def main() -> None:
         name: _src_md5(QUERIES[name]) for name in HEADLINE
     }
     full["module_md5"] = _module_md5s()
+    full["codegen_compiles"] = compiles
     here = os.path.dirname(os.path.abspath(__file__))
     # Commit anchoring (VERDICT r13 'what's wrong' 1): a fingerprint
     # that matches no committed tree can't separate box drift from code

@@ -649,10 +649,11 @@ def connected_components(
     # the bound, collect it once and run exact union-find driver-side:
     # labels are the same min-reachable-id, bit-identical, and the
     # driver holds O(edges) bytes, the same bounded-collect contract as
-    # the IVF centroid inline. Past the bound (count is one cheap scan
-    # of the checkpointed blocks) the distributed loop runs unchanged.
-    if edges.count() <= _CC_DRIVER_MAX_EDGES * 2:  # both directions
-        rows = edges.collect()
+    # the IVF centroid inline. One bounded collect both sizes and
+    # fetches the list: a result past the bound (both directions) is
+    # dropped and the distributed loop runs unchanged.
+    rows = edges.limit(2 * _CC_DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= 2 * _CC_DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def find(x):

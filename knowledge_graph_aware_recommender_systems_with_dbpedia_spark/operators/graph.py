@@ -25,15 +25,17 @@ Semantics preserved from the reference:
 
 Scale notes: node/edge construction is pure select/union/join — no
 driver loop, no collect. The k-core loop is the one inherently
-iterative op; each iteration is a groupBy-count + semi-join and the
-lineage is truncated with ``localCheckpoint`` to stop plan blowup.
+iterative op (:func:`kcore_fixpoint`); each round is two window-count
+filters materialized by one eager ``localCheckpoint``, which also
+stops plan blowup.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 USER = "user"
@@ -248,34 +250,22 @@ def filter_kcore(
 
     Faithful to the reference (methods.py:28-47): per iteration, drop
     every ``target`` whose degree < k, cascade-delete its edges, stop
-    early when nothing was deleted. NOT a fixpoint k-core unless
-    ``iterations`` is large — the bound is part of the semantics.
+    early when nothing was deleted. NOT a fixpoint k-core: only the
+    ``target`` side is filtered, so the other side's degrees may fall
+    below k.
 
-    Scale: each iteration = one partial-agg count + one broadcast-able
-    semi-join; lineage truncated via localCheckpoint so long runs don't
-    accumulate a thousand-stage plan.
+    That also makes every iteration after the first a no-op: a kept
+    target keeps all of its edges, so its degree is unchanged and the
+    second iteration deletes nothing, which is the reference's early
+    stop. The filter is therefore one partial-agg count + one
+    broadcast-able semi-join whatever ``iterations`` is (at least 1),
+    with no action run while the frame is built.
     """
+    if iterations < 1:
+        return ratings
     key = user_col if target == "user" else item_col
-    current = ratings
-    if iterations == 1:
-        # single pass needs no early-stop bookkeeping: one partial-agg
-        # count + one semi-join, zero extra actions
-        keep = current.groupBy(key).count().filter(F.col("count") >= k).select(key)
-        return current.join(keep, key, "left_semi")
-    # iterative path: materialize between rounds so each count() does
-    # not replay the whole upstream lineage
-    current = current.localCheckpoint(eager=True)
-    before = current.count()
-    for i in range(iterations):
-        keep = current.groupBy(key).count().filter(F.col("count") >= k).select(key)
-        nxt = current.join(keep, key, "left_semi")
-        nxt = nxt.localCheckpoint(eager=True) if i < iterations - 1 else nxt
-        after = nxt.count()
-        current = nxt
-        if before == after:
-            break
-        before = after
-    return current
+    keep = ratings.groupBy(key).count().filter(F.col("count") >= k).select(key)
+    return ratings.join(keep, key, "left_semi")
 
 
 def triples(g: KGraph, which: str = "all") -> DataFrame:
@@ -785,47 +775,75 @@ def kcore_fixpoint(
     (p,q)-core: the maximal edge subset where every item keeps degree
     >= k_item AND every user keeps degree >= k_user. Unlike
     :func:`filter_kcore` (iteration-bounded by reference fidelity),
-    this peels to the FIXPOINT: alternate item-filter / user-filter
-    rounds until an entire round deletes nothing.
+    this peels to the FIXPOINT: alternate user-filter / item-filter
+    rounds until nothing more would be deleted (the core is unique, so
+    the order is free).
 
-    Returns ``(core_edges, rounds_run, converged)``. Each round is two
-    keyed partial-agg degree counts + two semi-joins (broadcast-able:
-    the keep-lists shrink monotonically); lineage is truncated with
-    localCheckpoint so long cascades don't stack a thousand-stage
-    plan. Deletion monotonicity makes the loop terminate in at most
-    |edges| rounds; real graphs converge in a handful (the driver
-    query asserts its bound).
+    Returns ``(core_edges, rounds_run, converged)``. The peel is a
+    chain of degree windows, ``count(1) over (partition by key)``,
+    alternating user, item, user, ... (a groupBy + semi-join would
+    fork the lineage, and AQE runs each forked keep-list as a job of
+    its own). Each round is two windows materialized by ONE eager
+    localCheckpoint (one action; it also truncates the lineage so long
+    cascades don't stack a thousand-stage plan), and the next round
+    filters on the stored degrees. Every window's least degree is an
+    observed metric of that same job, and it decides termination with
+    no verification round: the frame entering a window (after the
+    first) has just left the other side's filter, so it is feasible
+    for that side, and if its least degree on this side reaches k it
+    is the core. A graph that is already a core therefore takes one
+    round. The user window goes first because a frame that arrives
+    hash-partitioned by user (:func:`kcore_decremental`'s anti-join)
+    then needs no exchange for it. Deletion monotonicity makes the
+    loop terminate in at most |edges| rounds; real graphs converge in
+    a handful (the driver query asserts its bound). Rows with a null
+    user or item are dropped up front, as the semi-join did.
     """
-    # lazy checkpoint + count: the count materializes the checkpoint in
-    # the SAME job (LocalRDDCheckpointData persists partitions as the
-    # job computes them), so each round pays one job for
-    # materialize+probe instead of two (guide §1.2 — fewer passes)
-    current = ratings.localCheckpoint(eager=False)
-    before = current.count()
-    rounds, converged = 0, False
-    while rounds < max_rounds:
-        ki = (
-            current.groupBy(item_col)
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .filter(F.col("_d") >= k_item)
-            .select(item_col)
-        )
-        step = current.join(ki, item_col, "left_semi")
-        ku = (
-            step.groupBy(user_col)
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .filter(F.col("_d") >= k_user)
-            .select(user_col)
-        )
-        nxt = step.join(ku, user_col, "left_semi").localCheckpoint(eager=False)
-        after = nxt.count()
-        current = nxt
+    frame = ratings.filter(
+        F.col(user_col).isNotNull() & F.col(item_col).isNotNull()
+    )
+    rounds, converged, k_prev = 0, False, None
+    while rounds < max_rounds and not converged:
         rounds += 1
-        if after == before:
-            converged = True
-            break
-        before = after
-    return current, rounds, converged
+        observed = []
+        for col, k in ((user_col, k_user), (item_col, k_item)):
+            # every window but the very first gets a frame that has just
+            # left the other side's filter
+            checked = k_prev is not None
+            if checked:
+                frame = frame.filter(F.col("_deg") >= k_prev).drop("_deg")
+            frame = _with_degree(frame, col)
+            if checked:
+                obs = Observation()
+                frame = frame.observe(obs, F.min("_deg").alias("least"))
+                observed.append((obs, k))
+            k_prev = k
+        frame = frame.localCheckpoint(eager=True)
+        for obs, k in observed:
+            least = _observed(obs).get("least")
+            converged = converged or least is None or least >= k  # None: no rows
+    if k_prev is not None:  # the last item filter, a no-op once converged
+        frame = frame.filter(F.col("_deg") >= k_prev).drop("_deg")
+    return frame, rounds, converged
+
+
+def _with_degree(df: DataFrame, key: str) -> DataFrame:
+    """``df`` plus ``_deg``, the number of its rows sharing ``key``."""
+    return df.withColumn("_deg", F.count(F.lit(1)).over(Window.partitionBy(key)))
+
+
+def _observed(obs: Observation) -> dict:
+    """The metrics the action filled in, ``{}`` if none were observed."""
+    try:
+        return obs.get
+    except Py4JJavaError as exc:
+        # an input the optimizer proves empty collapses, observer and
+        # all, to an empty local relation; Spark then reports a metric
+        # row without a schema, which PySpark's row conversion rejects
+        # with an AssertionError
+        if exc.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        return {}
 
 
 def kcore_decremental(
@@ -853,8 +871,9 @@ def kcore_decremental(
 
     Cost: the cascade runs over the PRIOR CORE (already the pruned,
     usually far smaller frame), not the full graph, and typically
-    converges in one or two verification rounds when the deleted
-    users' items retain degree — vs the full peel's cold start. At
+    converges in one round when the deleted users' items retain
+    degree, and that round's user window reuses the anti-join's user
+    partitioning — vs the full peel's cold start. At
     100 TB this is the difference between re-scanning the corpus and
     touching the affected neighborhood's partitions.
     """

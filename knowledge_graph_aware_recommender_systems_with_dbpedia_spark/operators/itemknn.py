@@ -65,7 +65,6 @@ def item_cosine_similarity(
     rating_col: str = "rating",
     broadcast_overcap: bool = True,
     overcap_users: DataFrame | None = None,
-    checkpoint_pairs: bool = False,
 ) -> DataFrame:
     """Co-rating cosine similarity -> (item_a, item_b, n_common, sim),
     emitted in BOTH directions (the pair is computed once with
@@ -124,20 +123,6 @@ def item_cosine_similarity(
     # join (the AQE skew test pins this posture), which at scale is
     # worth far more than the duplicated agg; an explode-mirror is a
     # pushdown barrier.
-    #
-    # ``checkpoint_pairs`` (VERDICT r14 item 7): a consumer that applies
-    # NO item filter downstream (the recommenders — their only consumer
-    # is the unfiltered topm window) gains nothing from pushability and
-    # pays the reduce-side pair aggregation twice. With the flag, the
-    # aggregated pairs are lazily localCheckpointed before mirroring:
-    # the first action materializes each partition once, the mirror
-    # branch reads the stored blocks — agg paid ONCE for pair-table-
-    # sized MEMORY_AND_DISK storage (the window downstream was already
-    # sorting 2x that volume), blocks GC-reaped with the frame (no
-    # persist-leak bookkeeping). Default stays False so filtering
-    # consumers keep full pushdown below the pair join.
-    if checkpoint_pairs:
-        pairs = pairs.localCheckpoint(eager=False)
     sym = pairs.unionByName(
         pairs.select(
             F.col("item_b").alias("item_a"),
@@ -176,7 +161,6 @@ def kg_item_similarity(
     max_items_per_entity: int | None = None,
     item_col: str = "item_id",
     entity_col: str = "entity",
-    checkpoint_pairs: bool = False,
 ) -> DataFrame:
     """KG Jaccard similarity -> (item_a, item_b, n_shared, sim), both
     directions. ``item_entities`` is the (item, entity) edge table the
@@ -236,9 +220,6 @@ def kg_item_similarity(
         .filter(F.col("n_shared") >= min_shared)
     )
     # union-of-mirror kept pushable — see item_cosine_similarity
-    # (checkpoint_pairs: same single-agg move for unfiltered consumers)
-    if checkpoint_pairs:
-        pairs = pairs.localCheckpoint(eager=False)
     sym = pairs.unionByName(
         pairs.select(
             F.col("item_b").alias("item_a"),
@@ -397,10 +378,6 @@ class ItemKNNRecommender(Recommender):
                 max_user_degree=self.max_user_degree,
                 broadcast_overcap=broadcast_overcap,
                 overcap_users=overcap,
-                # the ONLY consumer here is the unfiltered topm window,
-                # so pushability buys nothing and the lazy checkpoint
-                # halves the pair aggregation (VERDICT r14 item 7)
-                checkpoint_pairs=True,
             ),
             self.m,
         ).persist()
@@ -463,9 +440,6 @@ class KGSimRecommender(Recommender):
                 min_shared=self.min_shared,
                 max_entity_df=self.max_entity_df,
                 max_items_per_entity=self.max_items_per_entity,
-                # unfiltered topm is the only consumer — single-agg
-                # checkpoint, see ItemKNNRecommender.train
-                checkpoint_pairs=True,
             ),
             self.m,
         ).persist()

@@ -47,6 +47,22 @@ def get_spark(
         # unchanged; only the "user line that caused it" annotation on
         # error messages is lost.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache (static, JVM-wide). Spark's default
+        # LRU keeps 100 compiled whole-stage/expression classes, but a
+        # warm session cycles through far more, so each class was
+        # evicted before its next use and recompiled in Janino: the
+        # six-query perfbench battery uses ~200 distinct classes and
+        # recompiled ~160-200 of them on every warm pass. Sized from a
+        # full registry sweep (scripts/check_correctness.py's query
+        # set, sf0.001, local[4], 2 GB heap, run twice in one session):
+        # the first pass compiles 3,905 distinct classes; at 100
+        # entries both passes compile ~7,700, at 5,000 the second
+        # compiles 216 (the classes whose source embeds per-run
+        # literals, the same 216-286 as at 20,000). 5,000 holds the
+        # registry's ~3,900 with ~25% headroom. Cost of the sweep at
+        # 5,000 vs 100: metaspace 249 vs 217 MB, JVM peak RSS 3.24 vs
+        # 3.13 GB.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
@@ -55,3 +71,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (the count of
+    Spark's ``CodegenMetrics`` compile-time histogram). A warm query
+    that raises it missed the generated-class cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -461,6 +461,80 @@ def test_kcore_fixpoint_hand_computed_cascade(spark):
     assert got == {(1, 10), (1, 11), (2, 10), (2, 11)}
 
 
+def test_kcore_fixpoint_drops_null_keys(spark):
+    """A null user or item never matched the old semi-join's keep-list;
+    the window counts must not let a block of null keys through."""
+    rows = [(None, 10), (None, 10), (None, 11), (1, None), (1, None),
+            (1, 10), (1, 11), (2, 10), (2, 11)]
+    r = spark.createDataFrame(rows, "user_id bigint, item_id bigint")
+    core, _, conv = G.kcore_fixpoint(r, k_item=2, k_user=2)
+    assert conv
+    assert sorted(tuple(x) for x in core.collect()) == [
+        (1, 10), (1, 11), (2, 10), (2, 11)
+    ]
+
+
+def test_kcore_fixpoint_converged_round_is_one_action(spark):
+    """An input that is already a core converges in its first round, and
+    that round is one action: the user and item degree windows are one
+    query (one job per shuffle stage plus the result job), with the
+    termination probe riding it as an observed metric. The old
+    semi-join peel spent 9 jobs here (a count, then per-round keep-list
+    broadcasts and a second, verification round)."""
+    rows = [(u, i) for u in range(6) for i in range(6)]
+    r = spark.createDataFrame(rows, "user_id bigint, item_id bigint")
+    sc = spark.sparkContext
+    group = "test_kcore_converged_round"
+    sc.setJobGroup(group, group)
+    try:
+        core, rounds, conv = G.kcore_fixpoint(r, k_item=3, k_user=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert conv and rounds == 1
+    assert 1 <= len(jobs) <= 3, len(jobs)
+    assert core.count() == 36
+
+
+def test_kcore_fixpoint_matches_brute_force(spark):
+    """The termination rule (stop once a window's least degree reaches
+    its k, with no verification round) against a plain python peel on
+    random graphs with duplicate edges, for the full peel and for the
+    decremental one, and a long cascade that needs several rounds."""
+    import random
+    from collections import Counter
+
+    def peel(rows, ki, ku):
+        while True:
+            di = Counter(i for _, i in rows)
+            du = Counter(u for u, _ in rows)
+            kept = [(u, i) for u, i in rows if di[i] >= ki and du[u] >= ku]
+            if len(kept) == len(rows):
+                return sorted(rows)
+            rows = kept
+
+    for seed in range(6):
+        rng = random.Random(seed)
+        rows = [(rng.randint(1, 20), rng.randint(1, 12)) for _ in range(90)]
+        ki, ku = rng.randint(2, 4), rng.randint(2, 4)
+        r = spark.createDataFrame(rows, "user_id bigint, item_id bigint")
+        core, _, conv = G.kcore_fixpoint(r, k_item=ki, k_user=ku)
+        assert conv and sorted(tuple(x) for x in core.collect()) == peel(rows, ki, ku)
+        deleted = core.filter(F.col("user_id") % 3 == 0).select("user_id").distinct()
+        inc, _, conv = G.kcore_decremental(core, deleted, k_item=ki, k_user=ku)
+        assert conv and sorted(tuple(x) for x in inc.collect()) == peel(
+            [x for x in rows if x[0] % 3], ki, ku
+        ), seed
+    # a bipartite path u0-i0-u1-i1-...-u7-i7 peels from both ends
+    path = [(j, j) for j in range(8)] + [(j + 1, j) for j in range(7)]
+    r = spark.createDataFrame(path, "user_id bigint, item_id bigint")
+    _, rounds, conv = G.kcore_fixpoint(r, k_item=2, k_user=2, max_rounds=1)
+    assert rounds == 1 and not conv
+    core, rounds, conv = G.kcore_fixpoint(r, k_item=2, k_user=2)
+    assert conv and rounds > 1 and core.count() == 0
+
+
 @pytest.mark.slow
 def test_kcore_decremental_matches_from_scratch(spark):
     """The maintenance theorem, adversarially: peeling the STALE core

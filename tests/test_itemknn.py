@@ -65,38 +65,6 @@ def test_item_cosine_similarity_exact(spark, ratings):
         assert sym[(b, a)] == sym[(a, b)]
 
 
-def test_checkpoint_pairs_matches_default(spark, ratings):
-    """checkpoint_pairs=True (the recommenders' single-agg path,
-    VERDICT r14 item 7) is a pure materialization change: rows, sims
-    and mirror symmetry are identical to the pushable default."""
-    want = sorted(
-        (r.item_a, r.item_b, r.n_common, r.sim)
-        for r in IK.item_cosine_similarity(ratings).collect()
-    )
-    got = sorted(
-        (r.item_a, r.item_b, r.n_common, r.sim)
-        for r in IK.item_cosine_similarity(ratings, checkpoint_pairs=True).collect()
-    )
-    assert got == want
-
-
-def test_kg_checkpoint_pairs_matches_default(spark):
-    e = spark.createDataFrame(
-        [(i, f"e{j}") for i in range(1, 6) for j in range(1, 4) if (i + j) % 2]
-        + [(1, "e9"), (2, "e9")],
-        "item_id long, entity string",
-    )
-    want = sorted(
-        (r.item_a, r.item_b, r.n_shared, r.sim)
-        for r in IK.kg_item_similarity(e).collect()
-    )
-    got = sorted(
-        (r.item_a, r.item_b, r.n_shared, r.sim)
-        for r in IK.kg_item_similarity(e, checkpoint_pairs=True).collect()
-    )
-    assert got == want
-
-
 def test_min_support_prunes(spark, ratings):
     got = IK.item_cosine_similarity(ratings, min_support=2).collect()
     for r in got:
