@@ -130,7 +130,10 @@ def doc_shingles(
     """(id, shingle) exploded distinct word-n-gram shingles.
 
     ``max_shingle_df`` drops shingles appearing in more than that many
-    docs — the skew/selectivity guard for the joins downstream.
+    docs — the skew/selectivity guard for the joins downstream. The
+    dropped set is left-anti joined away with no broadcast hint: which
+    side is small depends on the cap, so the planner picks the join
+    from its measured size. A null shingle is dropped too.
     """
     toks = docs.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
@@ -141,10 +144,10 @@ def doc_shingles(
     )
     if max_shingle_df is not None:
         dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        sh = sh.join(
-            F.broadcast(dfreq.filter(F.col("_df") <= max_shingle_df).select("shingle")),
+        sh = sh.filter(F.col("shingle").isNotNull()).join(
+            dfreq.filter(F.col("_df") > max_shingle_df).select("shingle"),
             "shingle",
-            "left_semi",
+            "left_anti",
         )
     return sh
 

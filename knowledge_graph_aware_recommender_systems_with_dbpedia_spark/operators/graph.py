@@ -820,7 +820,7 @@ def kcore_fixpoint(
             k_prev = k
         frame = frame.localCheckpoint(eager=True)
         for obs, k in observed:
-            least = _observed(obs).get("least")
+            least = observed_metrics(obs).get("least")
             converged = converged or least is None or least >= k  # None: no rows
     if k_prev is not None:  # the last item filter, a no-op once converged
         frame = frame.filter(F.col("_deg") >= k_prev).drop("_deg")
@@ -832,7 +832,7 @@ def _with_degree(df: DataFrame, key: str) -> DataFrame:
     return df.withColumn("_deg", F.count(F.lit(1)).over(Window.partitionBy(key)))
 
 
-def _observed(obs: Observation) -> dict:
+def observed_metrics(obs: Observation) -> dict:
     """The metrics the action filled in, ``{}`` if none were observed."""
     try:
         return obs.get

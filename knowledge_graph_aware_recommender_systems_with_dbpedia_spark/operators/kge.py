@@ -8,9 +8,11 @@ embeddings (``transE/model.py:78-151``).
 
 Spark-first split of responsibilities (SURVEY M2):
  * **Spark** builds the triples DataFrame (operators/graph.py
-   ``triples``) and joins the learned embeddings back to users/items
-   with zero-fill for entities missing from training (M3,
-   ``transE/model.py:111-135``);
+   ``triples``); for the partitioned and sharded trainers it also
+   joins the learned embeddings back to users/items with zero-fill
+   for entities missing from training (M3,
+   ``transE/model.py:111-135``) and scores the cosine top-k
+   (operators/recommend.py);
  * **the driver** runs the actual SGD — the one deliberately
    non-distributed stage, exactly like the reference's
    pykeen-on-one-GPU step.  The driver trainer executes the triple
@@ -23,7 +25,12 @@ Spark-first split of responsibilities (SURVEY M2):
    the 9 published scoring functions are implemented directly in
    numpy (margin ranking loss + uniform negative sampling — Bordes
    et al. 2013 and successors).  Parity target is metric-band, not
-   vector equality (SURVEY §6 risk register).
+   vector equality (SURVEY §6 risk register).  The driver trainer
+   already holds every entity vector, so it also scores there, as
+   the reference does: :func:`driver_topk` is the exact cosine top-k
+   of ``topk_by_cosine``/``topk_by_cosine_broadcast``, bit for bit,
+   and Spark only receives the finished (user, item, rank) rows.
+   LSH scoring still runs in Spark.
 
 Models: transe, transh, transr, transd, rotate, distmult, complex,
 rescal, tucker — registry ``KGE_MODELS`` mirrors the reference's
@@ -39,7 +46,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .recommend import Recommender, topk_by_cosine
@@ -99,10 +106,11 @@ def indexed_triples_df(
 
 def _sorted_codes(values: pa.ChunkedArray) -> tuple[pa.Array, np.ndarray]:
     """(sorted distinct values, each value's position among them).
-    Arrow sorts strings by their UTF-8 bytes, Spark's string order, so
-    the positions are the ids ``index_entities`` assigns."""
+    Arrow sorts strings by their UTF-8 bytes and here puts a null
+    first, Spark's ascending string order, so the positions are the
+    ids ``index_entities`` assigns."""
     names = pc.unique(values)
-    names = names.take(pc.array_sort_indices(names))
+    names = names.take(pc.array_sort_indices(names, null_placement="at_start"))
     return names, pc.index_in(values, value_set=names).to_numpy()
 
 
@@ -118,8 +126,10 @@ def collect_triples(
     ``entities[i]`` is the entity with id ``i``.
 
     The triple lineage runs once: the frame is persisted for the call,
-    counted, collected as Arrow string columns from the cache, and
-    indexed here with the ids :func:`index_entities` would assign.
+    counted by an observation on the job that fills the cache (a
+    ``count()`` would add a cache stage and an exchange: three jobs),
+    collected as Arrow string columns from the cache, and indexed here
+    with the ids :func:`index_entities` would assign.
     Triples with a null head, relation or tail are dropped, as the
     inner joins of :func:`indexed_triples_df` drop them.
 
@@ -130,15 +140,21 @@ def collect_triples(
     equi-joined parameter slices, deltas summed and joined back
     Spark-side) — nothing parameter-sized touches the driver;
     :func:`train_kge_partitioned` is the mid-tier (parameters
-    driver-held). Scoring downstream is unchanged either way — it only
-    needs the final entity-vector DataFrame.
+    driver-held). Both score in Spark from the final entity-vector
+    DataFrame.
     """
+    from .graph import observed_metrics
+
     t = triples.select("head", "relation", "tail").na.drop().persist()
     try:
-        n = t.count()
-        if n > max_triples:
+        obs = Observation()
+        t.observe(obs, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        n_obs = observed_metrics(obs).get("n", 0)
+        if n_obs > max_triples:
             raise ValueError(
-                f"refusing to collect {n:,} triples to the driver "
+                f"refusing to collect {n_obs:,} triples to the driver "
                 f"(cap {max_triples:,}): the single-node KGE SGD stage is for "
                 "reference-scale graphs. For larger graphs use "
                 "train_kge_sharded (KGERecommender(trainer='sharded')): the "
@@ -151,6 +167,7 @@ def collect_triples(
         tbl = t.toArrow()
     finally:
         t.unpersist()
+    n = tbl.num_rows
     heads, tails = tbl.column("head"), tbl.column("tail")
     ents, e = _sorted_codes(pa.chunked_array(heads.chunks + tails.chunks, heads.type))
     rels, r = _sorted_codes(tbl.column("relation"))
@@ -1263,11 +1280,142 @@ def embeddings_to_df(
     return ents.join(vdf, "idx").select("e", "vec")
 
 
-def named_embeddings_df(spark, model: _KGEModel, names: pa.Array) -> DataFrame:
+def named_embeddings_df(spark, names: pa.Array, vecs: np.ndarray) -> DataFrame:
     """M4 for the driver trainer: (e, vec) straight from the driver-side
-    entity names (``names[i]`` is entity ``i``), no id join."""
-    rows = list(zip(names.to_pylist(), model.entity_vectors().tolist()))
+    entity names (``names[i]`` is entity ``i``, its vector ``vecs[i]``),
+    no id join."""
+    rows = list(zip(names.to_pylist(), vecs.tolist()))
     return spark.createDataFrame(rows, "e string, vec array<double>")
+
+
+def collect_pairs(train: DataFrame) -> pa.Table:
+    """The train (user_id, item_id) pairs on the driver, for
+    :func:`driver_topk`: one Arrow collect of at most
+    ``MAX_DRIVER_TRIPLES + 1`` rows, refused past the cap. Called after
+    :func:`collect_triples`, whose guard already bounds the rated pairs;
+    the limit bounds the pairs whose null rating made no triple."""
+    cap = MAX_DRIVER_TRIPLES
+    tbl = train.select("user_id", "item_id").limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        raise ValueError(
+            f"refusing to score more than {cap:,} train ratings on the "
+            "driver: use KGERecommender(trainer='sharded'), whose embeddings "
+            "and scoring stay on the cluster"
+        )
+    return tbl
+
+
+# Users per block of :func:`driver_topk`. A block holds a few (block x
+# items) arrays, so the scorer's memory grows with the item catalog and
+# never with the number of users.
+_TOPK_BLOCK = 256
+
+
+def _typed_vectors(
+    ids: pa.Array, prefix: str, names: pa.Array, vecs: np.ndarray
+) -> np.ndarray:
+    """Each id's entity vector (entity ``prefix + id``); zeros for a null
+    id or an id with no entity, as the Spark path's left join fills."""
+    pos = pc.index_in(pc.binary_join_element_wise(prefix, ids, ""), value_set=names)
+    pos = pos.fill_null(-1).to_numpy()
+    out = np.zeros((len(ids), vecs.shape[1]))
+    out[pos >= 0] = vecs[pos[pos >= 0]]
+    return out
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """``x / norm`` for each row whose norm is positive — the scorers'
+    ``normed`` with the same bits: the squares are summed left to right
+    from 0.0, as ``aggregate`` folds them (BLAS would reorder the sum)."""
+    sq = np.zeros(len(x))
+    for j in range(x.shape[1]):
+        sq += x[:, j] * x[:, j]
+    norm = np.sqrt(sq)
+    out = x.copy()
+    pos = norm > 0
+    out[pos] /= norm[pos, None]
+    return out
+
+
+def _neg_dots(u: np.ndarray, items_t: np.ndarray) -> np.ndarray:
+    """``-(u . item)`` for every (row of ``u``, column of ``items_t``),
+    each dot summed left to right from 0.0 as ``aggregate(zip_with(...))``
+    folds it. One user at a time: the scalar-times-item-row products
+    then stay in cache, four times faster than a (users x items)
+    broadcast."""
+    out = np.zeros((len(u), items_t.shape[1]))
+    prod = np.empty(items_t.shape[1])
+    for user, acc in zip(u, out):
+        for x, item_col in zip(user, items_t):
+            np.multiply(item_col, x, out=prod)
+            acc += prod
+    return np.negative(out, out=out)
+
+
+def driver_topk(
+    pairs: pa.Table, names: pa.Array, vecs: np.ndarray, k: int,
+    all_recs: bool = False,
+) -> pa.Table:
+    """Exact cosine top-k on the driver: (user_id, item_id, rank) rows
+    equal to those of :func:`~.recommend.topk_by_cosine` and
+    :func:`~.recommend.topk_by_cosine_broadcast` fed the
+    ``KGERecommender`` vectors, row for row.
+
+    ``pairs`` are the train (user_id, item_id) strings, ``names[i]`` is
+    entity ``i`` and ``vecs[i]`` its vector. Users and items are the
+    distinct ids of ``pairs``; one with no ``u:``/``i:`` entity scores
+    with a zero vector. Per user, items sort by score descending, then
+    id ascending in UTF-8 byte order with a null id first (NaN scores
+    last, as the broadcast scorer's sort puts them); rated items drop
+    out and the first ``k`` stay (every unseen item with ``all_recs``).
+    A null id never matches a rating, as in Spark's joins.
+
+    Users are scored ``_TOPK_BLOCK`` at a time. In each block the rated
+    items' keys become NaN, and a user's candidates are every item
+    whose key is at most the user's k-th smallest (``np.partition``,
+    ties included), so the exact sort sees about k items per user.
+    """
+    users, u_code = _sorted_codes(pairs.column("user_id"))
+    items, i_code = _sorted_codes(pairs.column("item_id"))
+    uv = _unit_rows(_typed_vectors(users, "u:", names, vecs))
+    items_t = np.ascontiguousarray(_unit_rows(_typed_vectors(items, "i:", names, vecs)).T)
+    n_items = len(items)
+    rated = (pc.is_valid(pairs.column("user_id")).to_numpy()
+             & pc.is_valid(pairs.column("item_id")).to_numpy())
+    ru, ri = u_code[rated], i_code[rated]
+    order = np.argsort(ru, kind="stable")
+    ru, ri = ru[order], ri[order]
+    starts = np.searchsorted(ru, np.arange(len(users) + 1))
+    empty = np.zeros(0, np.int64)
+    out_u, out_i, out_r = [empty], [empty], [empty]
+    for lo in range(0, len(users), _TOPK_BLOCK):
+        hi = min(lo + _TOPK_BLOCK, len(users))
+        key = _neg_dots(uv[lo:hi], items_t)
+        seen = np.zeros(key.shape, dtype=bool)
+        seen[ru[starts[lo]:starts[hi]] - lo, ri[starts[lo]:starts[hi]]] = True
+        key[seen] = np.nan
+        if all_recs or k >= n_items:
+            cand = ~seen
+        else:
+            kth = np.partition(key, k - 1, axis=1)[:, k - 1 : k]
+            cand = key <= kth  # a NaN key, rated ones included, is never <=
+            short = np.isnan(kth[:, 0])  # fewer than k non-NaN keys: keep all
+            cand[short] = ~seen[short]
+        row, col = np.nonzero(cand)
+        # lexsort: last key first; a NaN key sorts last, -0.0 equals 0.0
+        order = np.lexsort((col, key[row, col], row))
+        row, col = row[order], col[order]
+        rank = np.arange(1, len(row) + 1) - np.searchsorted(row, row)
+        if not all_recs:
+            row, col, rank = row[rank <= k], col[rank <= k], rank[rank <= k]
+        out_u.append(row + lo)
+        out_i.append(col)
+        out_r.append(rank)
+    return pa.table({
+        "user_id": users.take(np.concatenate(out_u)),
+        "item_id": items.take(np.concatenate(out_i)),
+        "rank": pa.array(np.concatenate(out_r), pa.int32()),
+    })
 
 
 class KGERecommender(Recommender):
@@ -1277,6 +1425,16 @@ class KGERecommender(Recommender):
     ``graph.py:90``), optionally unioned with has_property/is triples
     from a KGraph. Type-prefixed entity ids (``u:``/``i:``) keep
     users and items distinct, as the reference's node classes do.
+
+    The driver trainer keeps what scoring needs on the driver — the
+    entity names and vectors, and the train (user_id, item_id) pairs
+    from one bounded Arrow collect — and leaves nothing persisted in
+    Spark. Its ``exact`` and ``broadcast`` scoring is
+    :func:`driver_topk`, bit-identical to the Spark scorers of those
+    names, handed to Spark as one Arrow-backed DataFrame; ``lsh``
+    scoring builds its inputs from the driver-held data and runs in
+    Spark. The partitioned and sharded trainers keep the train frame
+    and the entity vectors persisted in Spark and score there.
     """
 
     def __init__(self, model: str = "transe", k: int = 5, dim: int = 32,
@@ -1307,18 +1465,22 @@ class KGERecommender(Recommender):
         assert trainer in ("driver", "partitioned", "sharded"), trainer
         self.trainer = trainer
         self.n_partitions = n_partitions
+        self._spark = None
         self._train: DataFrame | None = None
         self._emb: DataFrame | None = None
+        # driver trainer: (train pairs, entity names, entity vectors)
+        self._driver: tuple[pa.Table, pa.Array, np.ndarray] | None = None
 
     def train(self, train_ratings: DataFrame,
               extra_triples: DataFrame | None = None) -> "KGERecommender":
-        spark = train_ratings.sparkSession
-        self._train = train_ratings.select(
+        spark = self._spark = train_ratings.sparkSession
+        self._train = self._emb = self._driver = None
+        train = train_ratings.select(
             F.col("user_id").cast("string").alias("user_id"),
             F.col("item_id").cast("string").alias("item_id"),
             "rating",
         ).persist()
-        triples = self._train.select(
+        triples = train.select(
             F.concat(F.lit("u:"), "user_id").alias("head"),
             F.concat(F.lit("rating"), F.col("rating").cast("string")).alias("relation"),
             F.concat(F.lit("i:"), "item_id").alias("tail"),
@@ -1332,10 +1494,17 @@ class KGERecommender(Recommender):
             adversarial_alpha=self.adversarial_alpha,
         )
         if self.trainer == "driver":
-            idx, ent_names, rel_names = collect_triples(triples)
+            try:
+                # the triples' guard runs before any collect; their
+                # cache-filling write fills train's cache for the pairs
+                idx, ent_names, rel_names = collect_triples(triples)
+                pairs = collect_pairs(train)
+            finally:
+                train.unpersist()
             m = train_kge(idx, len(ent_names), len(rel_names), **hyper)
-            self._emb = named_embeddings_df(spark, m, ent_names).persist()
+            self._driver = (pairs, ent_names, m.entity_vectors())
             return self
+        self._train = train
         ents, rels = index_entities(triples)
         ents, rels = ents.persist(), rels.persist()
         if self.trainer == "sharded":
@@ -1355,8 +1524,9 @@ class KGERecommender(Recommender):
         self._emb = embeddings_to_df(spark, m, ents).persist()
         return self
 
-    def _typed(self, prefix: str, id_col: str, ids: DataFrame) -> DataFrame:
-        have = self._emb.filter(F.col("e").startswith(prefix)).select(
+    def _typed(self, emb: DataFrame, prefix: str, id_col: str,
+               ids: DataFrame) -> DataFrame:
+        have = emb.filter(F.col("e").startswith(prefix)).select(
             F.expr(f"substring(e, {len(prefix) + 1})").alias(id_col), "vec"
         )
         zero = F.array_repeat(F.lit(0.0), self.dim)
@@ -1365,11 +1535,21 @@ class KGERecommender(Recommender):
         )
 
     def get_recommendations(self, k: int | None = None) -> DataFrame:
-        assert self._train is not None, "call train() first"
+        assert self._train is not None or self._driver is not None, "call train() first"
         k = k or self.k
-        train = self._train.select("user_id", "item_id")
-        uv = self._typed("u:", "user_id", train.select("user_id").distinct())
-        iv = self._typed("i:", "item_id", train.select("item_id").distinct())
+        if self._driver is not None:
+            pairs, names, vecs = self._driver
+            if self.scoring != "lsh":
+                return self._spark.createDataFrame(
+                    driver_topk(pairs, names, vecs, k, self.all_recs),
+                    "user_id string, item_id string, rank int",
+                )
+            train = self._spark.createDataFrame(pairs)
+            emb = named_embeddings_df(self._spark, names, vecs)
+        else:
+            train, emb = self._train.select("user_id", "item_id"), self._emb
+        uv = self._typed(emb, "u:", "user_id", train.select("user_id").distinct())
+        iv = self._typed(emb, "i:", "item_id", train.select("item_id").distinct())
         if self.scoring == "lsh":
             from .recommend import topk_by_cosine_lsh
 

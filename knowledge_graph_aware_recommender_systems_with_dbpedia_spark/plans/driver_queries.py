@@ -1936,7 +1936,9 @@ def rec_kge_transe_top5(spark, sf_dir):
     """M2-M5: TransE over rating triples -> cosine top-5.
 
     The KGE SGD stage is single-node by design (SURVEY M2, the
-    reference's pykeen step); Spark builds the triples and scores.
+    reference's pykeen step); Spark builds the triples, and the driver,
+    which holds the entity vectors, scores the exact cosine top-5
+    (operators/kge.driver_topk) and hands Spark the ranked rows.
     No DuckDB oracle (iterative stochastic training) — rows-only
     check; gradient/learning semantics covered by tests/test_kge.py.
     """

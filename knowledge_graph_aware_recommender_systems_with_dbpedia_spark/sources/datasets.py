@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import integration as DI
+from ..operators.graph import observed_metrics
 from .raw_csv import read_csv, read_csv_multichar_sep, read_ndjson
 from .typed_csv import read_typed_csv, write_typed_csv
 
@@ -100,10 +101,16 @@ class DatasetAdapter:
         else:
             raise ValueError("map_URIs needs an offline labels DataFrame or a fetch callable")
         out = mapped.select("item_id", "URI")
-        # one aggregate, so the link lineage runs once for the print
-        n, matched = out.agg(F.count(F.lit(1)), F.count("URI")).first()
-        print(f"{self.name}: matched {matched}/{n} items")  # A5 invariant print
-        return self._write(out, "map.csv")
+        # the counts for the print are observed on the write, so the
+        # link lineage runs once
+        obs = Observation()
+        self._write(
+            out.observe(obs, F.count(F.lit(1)).alias("n"), F.count("URI").alias("matched")),
+            "map.csv",
+        )
+        m = observed_metrics(obs)  # {} when the optimizer proved the input empty
+        print(f"{self.name}: matched {m.get('matched', 0)}/{m.get('n', 0)} items")  # A5 invariant print
+        return out
 
     def enrich_data(self, properties: DataFrame, prop_cols: list[str]) -> DataFrame:
         """A1 group-concat enrichment against an offline properties

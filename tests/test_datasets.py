@@ -161,3 +161,41 @@ def test_book_crossing_cp1252(spark, tmp_path):
     assert ds.convert_item_data().collect()[0].name == "Classical Mythology"
     assert ds.convert_user_data().count() == 1
     assert ds.convert_rating_data().collect()[0].rating == 7.0
+
+
+def test_map_uris_links_once(spark, tmp_path, capsys):
+    """map_URIs prints its matched/total counts from an observation on
+    the map.csv write: the link lineage runs once, as often as in a
+    plain write of the linked frame."""
+    from pyspark.sql.types import StringType
+
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators import (
+        integration as DI,
+    )
+
+    raw, out = tmp_path / "raw", tmp_path / "out"
+    raw.mkdir(), out.mkdir()
+    _ml100k_raw(raw)
+    ds = DS.MovieLens100k(spark, str(raw), str(out))
+    ds.convert_item_data()
+    evals = spark.sparkContext.accumulator(0)
+
+    def seen(label):
+        evals.add(1)
+        return label
+
+    labels = spark.createDataFrame(
+        [("toy story", "dbr:Toy_Story"), ("heat", "dbr:Heat")], "label string, uri string"
+    ).select(F.udf(seen, StringType())("label").alias("label"), "uri")
+    capsys.readouterr()
+    mapped = ds.map_URIs(labels=labels)
+    assert capsys.readouterr().out.strip() == "ml-100k: matched 1/2 items"
+    per_call = evals.value
+    items = read_typed_csv(spark, os.path.join(str(out), "item.csv")).select(
+        "item_id", F.col(ds.item_name_col()).alias("name")
+    )
+    DI.link_entities(items, labels).write.format("noop").mode("overwrite").save()
+    assert per_call == evals.value - per_call > 0
+    got = {r.item_id: r.URI for r in read_typed_csv(spark, os.path.join(str(out), "map.csv")).collect()}
+    assert got == {"1": "dbr:Toy_Story", "2": None}
+    assert {r.item_id: r.URI for r in mapped.collect()} == got

@@ -455,6 +455,36 @@ def test_contamination_max_shingle_df_guard(spark):
     assert without.count() == 5
 
 
+def test_doc_shingles_df_cap_anti_joins_the_hot_set(spark):
+    """max_shingle_df keeps exactly the shingles in at most that many
+    docs, by a left-anti join against the hot set that the planner
+    broadcasts only when its size allows it (no forced broadcast)."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e"), (3, "a b c f g"), (4, None), (5, "x y")],
+        "doc_id int, text string",
+    )
+    full = DD.doc_shingles(docs, n=2)
+    df = {}
+    for r in full.collect():
+        df[r.shingle] = df.get(r.shingle, 0) + 1
+    capped = DD.doc_shingles(docs, n=2, max_shingle_df=2)
+    want = sorted((r.id, r.shingle) for r in full.collect() if df[r.shingle] <= 2)
+    assert sorted((r.id, r.shingle) for r in capped.collect()) == want
+    assert "a b" in df and df["a b"] == 3 and len(want) < len(df)
+    plan = capped._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        capped = DD.doc_shingles(docs, n=2, max_shingle_df=2)
+        assert sorted((r.id, r.shingle) for r in capped.collect()) == want
+        plan = capped._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in plan and "LeftAnti" in plan, plan
+
+
 def test_dp1_training_pipeline_stages_monotone(spark):
     """The composed dedup -> decontaminate -> sample -> pack pipeline:
     each stage only removes docs, every surviving doc gets exactly one

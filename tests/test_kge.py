@@ -89,12 +89,23 @@ def _persisted_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _job_count(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by a job group."""
+    sc = spark.sparkContext
+    group = f"test_jobs_{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_collect_triples_guard_fails_fast(spark, monkeypatch):
     """An oversized triple set must raise the actionable cap error
     BEFORE any driver collect, not OOM mid-collect — and release the
     frame it persisted for the count either way."""
-    from pyspark.sql import DataFrame
-
     t = _triples(spark, [("u:1", "r", "i:1"), ("u:2", "r", "i:2"), ("u:3", "r", "i:1")])
     cached = _persisted_rdds(spark)
 
@@ -102,7 +113,8 @@ def test_collect_triples_guard_fails_fast(spark, monkeypatch):
         raise AssertionError("collected before the size guard")
 
     with monkeypatch.context() as m:
-        m.setattr(DataFrame, "toArrow", no_collect)
+        # the concrete class: it overrides toArrow
+        m.setattr(type(t), "toArrow", no_collect)
         with pytest.raises(ValueError, match="refusing to collect"):
             kge.collect_triples(t, max_triples=2)
     assert _persisted_rdds(spark) == cached
@@ -193,20 +205,144 @@ def test_driver_train_runs_no_dense_id_jobs(spark, monkeypatch):
         [(u, i, float(1 + (u + i) % 5)) for u in range(12) for i in range(u % 4, 20, 3)],
         "user_id int, item_id int, rating double",
     )
-    sc = spark.sparkContext
-    group = "test_driver_train_jobs"
-    sc.setJobGroup(group, group)
-    try:
-        rec = kge.KGERecommender("transe", k=3, dim=4, epochs=1, seed=3).train(ratings)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # the count that fills the cache + the Arrow collect from it
-    assert 1 <= len(jobs) <= 4, len(jobs)
-    assert rec._emb.count() == 12 + 20
-    rec._train.unpersist()
-    rec._emb.unpersist()
+    cached = _persisted_rdds(spark)
+    rec = kge.KGERecommender("transe", k=3, dim=4, epochs=1, seed=3)
+    jobs = _job_count(spark, lambda: rec.train(ratings))
+    # the triple count on the write that fills the caches, the Arrow
+    # collect of the triples and the pairs collect
+    assert 1 <= jobs <= 4, jobs
+    assert _persisted_rdds(spark) == cached
+    rec.get_recommendations().collect()
+    assert _persisted_rdds(spark) == cached
+
+
+def test_driver_train_guard_fails_before_any_collect(spark, monkeypatch):
+    """train(trainer='driver') refuses an oversized triple set before
+    any Arrow collect (of the triples or of the train pairs) and leaves
+    nothing persisted."""
+    ratings = spark.createDataFrame(
+        [(1, 1, 5.0), (2, 2, 4.0), (3, 1, 3.0)], "user_id int, item_id int, rating double"
+    )
+    cached = _persisted_rdds(spark)
+    guarded = kge.collect_triples
+
+    def no_collect(self):
+        raise AssertionError("collected before the size guard")
+
+    with monkeypatch.context() as m:
+        m.setattr(kge, "collect_triples", lambda t: guarded(t, max_triples=2))
+        m.setattr(type(ratings), "toArrow", no_collect)
+        with pytest.raises(ValueError, match="refusing to collect"):
+            kge.KGERecommender("transe", k=3, dim=4, epochs=1).train(ratings)
+    assert _persisted_rdds(spark) == cached
+
+
+def test_driver_train_refuses_too_many_pairs(spark, monkeypatch):
+    """Ratings whose null rating makes no triple still count against the
+    cap: the pairs collect stops at cap + 1 rows and refuses."""
+    ratings = spark.createDataFrame(
+        [(1, 1, 5.0), (2, 2, None), (3, 1, None)], "user_id int, item_id int, rating double"
+    )
+    cached = _persisted_rdds(spark)
+    monkeypatch.setattr(kge, "MAX_DRIVER_TRIPLES", 2)
+    with pytest.raises(ValueError, match="refusing to score more than 2 train ratings"):
+        kge.KGERecommender("transe", k=3, dim=4, epochs=1).train(ratings)
+    assert _persisted_rdds(spark) == cached
+
+
+def test_driver_recommendations_run_one_job(spark):
+    """A driver-trained model scores on the driver: its recommendations
+    reach pandas in the one job that reads the Arrow-backed frame."""
+    rows = [(u, i, float(1 + (u * i) % 5)) for u in range(30) for i in range(u % 5, 25, 4)]
+    rows += [(99, i, 3.0) for i in range(25)]  # nothing unseen: no rows
+    ratings = spark.createDataFrame(rows, "user_id int, item_id int, rating double")
+    rec = kge.KGERecommender("transe", k=3, dim=4, epochs=1, seed=3).train(ratings)
+    got = []
+    assert _job_count(spark, lambda: got.append(rec.get_recommendations(3).toPandas())) <= 1
+    assert len(got[0]) == 30 * 3 and "99" not in set(got[0]["user_id"])
+
+
+def test_driver_scorer_sums_left_to_right():
+    """Norms and dots of the driver scorer equal a plain left fold from
+    0.0, as Spark's aggregate(zip_with(...)) computes them; a BLAS
+    product sums in another order and misses some of them by an ulp."""
+    rng = np.random.default_rng(2)
+    u, it = rng.normal(size=(40, 16)), rng.normal(size=(600, 16))
+    u[3] = 0.0  # a zero vector is left as it is
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc = acc + x
+        return acc
+
+    def unit(v):
+        norm = float(np.sqrt(fold(x * x for x in v)))
+        return [x / norm for x in v] if norm > 0 else list(v)
+
+    un, itn = kge._unit_rows(u), kge._unit_rows(it)
+    assert un.tolist() == [unit(v) for v in u] and itn.tolist() == [unit(v) for v in it]
+    want = [[-fold(a * b for a, b in zip(x, y)) for y in itn.tolist()] for x in un.tolist()]
+    assert kge._neg_dots(un, np.ascontiguousarray(itn.T)).tolist() == want
+
+
+_ZZ, _SMILE = "\uff5a", "\U0001f600"  # UTF-8 order: U+FF5A first; UTF-16: U+1F600
+
+
+@pytest.mark.parametrize("all_recs,k", [(False, 3), (False, 40), (True, 3)])
+def test_driver_topk_matches_spark_scorers(spark, all_recs, k):
+    """The driver scorer's rows equal both Spark scorers' rows, fed the
+    same vectors: more users than one block, exact score ties broken by
+    UTF-8 byte order, a zero-vector user, a user who rated every item,
+    k above the unseen count (k=40, 23 items), all_recs, and null ids."""
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.recommend import (
+        topk_by_cosine,
+        topk_by_cosine_broadcast,
+    )
+
+    items = [f"m{i}" for i in range(20)] + [_SMILE, _ZZ, "Zoë"]
+    rng = np.random.default_rng(11)
+    rows = [
+        (u, items[i], float(rng.integers(1, 6)))
+        for u in range(kge._TOPK_BLOCK + 40)
+        for i in rng.choice(len(items), rng.integers(1, 6), replace=False)
+    ]
+    rows += [(9000, it, 4.0) for it in items]  # rated every item
+    rows += [(9001, "m0", None)]  # only rating null: no triple, no entity
+    rows += [(None, "m2", 3.0), (7, None, 2.0)]
+    ratings = spark.createDataFrame(rows, "user_id int, item_id string, rating double")
+    rec = kge.KGERecommender(
+        "transe", k=k, dim=4, epochs=1, seed=5, all_recs=all_recs
+    ).train(ratings)
+    pairs, names, vecs = rec._driver
+    pos = {n: i for i, n in enumerate(names.to_pylist())}
+    assert "u:9001" not in pos
+    for e in (f"i:{_ZZ}", f"i:{_SMILE}", "i:m1", "i:m2"):  # exact score ties
+        vecs[pos[e]] = vecs[pos["i:m0"]]
+    vecs[pos["u:1"]] = vecs[pos["u:0"]]
+
+    def rows_of(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    driver = rows_of(rec.get_recommendations())
+    emb = kge.named_embeddings_df(spark, names, vecs)
+    train = spark.createDataFrame(pairs)
+    uv = rec._typed(emb, "u:", "user_id", train.select("user_id").distinct())
+    iv = rec._typed(emb, "i:", "item_id", train.select("item_id").distinct())
+    assert driver == rows_of(topk_by_cosine(uv, iv, k=k, train=train, all_recs=all_recs))
+    assert driver == rows_of(
+        topk_by_cosine_broadcast(uv, iv, k=k, train=train, all_recs=all_recs)
+    )
+    # no rating matches the null item, so it is all user 9000 has unseen
+    assert [(i, r) for u, i, r in driver if u == "9000"] == [(None, 1)]
+    # every score of the zero-vector user is 0.0: the null item, then
+    # byte order, without the rated m0
+    zero_user = sorted((r, i) for u, i, r in driver if u == "9001")
+    assert [i for _, i in zero_user[:3]] == [None, "Zoë", "m1"]
+    if all_recs:
+        ranks = {(u, i): r for u, i, r in driver}
+        tied = {u for u, _, _ in driver if (u, _ZZ) in ranks and (u, _SMILE) in ranks}
+        assert tied and all(ranks[(u, _ZZ)] < ranks[(u, _SMILE)] for u in tied)
 
 
 @pytest.mark.slow
