@@ -12,7 +12,6 @@ from .recommend import (
     PopularityRecommender,
     Recommender,
     topk_by_cosine,
-    topk_by_cosine_broadcast,
     topk_by_cosine_lsh,
 )
 from .node2vec import Node2VecRecommender
@@ -35,7 +34,6 @@ __all__ = [
     "PopularityRecommender",
     "Recommender",
     "topk_by_cosine",
-    "topk_by_cosine_broadcast",
     "topk_by_cosine_lsh",
     "Node2VecRecommender",
     "KGE_MODELS",

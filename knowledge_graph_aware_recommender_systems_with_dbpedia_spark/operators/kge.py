@@ -12,7 +12,7 @@ Spark-first split of responsibilities (SURVEY M2):
    joins the learned embeddings back to users/items with zero-fill
    for entities missing from training (M3,
    ``transE/model.py:111-135``) and scores the cosine top-k
-   (operators/recommend.py);
+   (``recommend.topk_by_cosine``);
  * **the driver** runs the actual SGD — the one deliberately
    non-distributed stage, exactly like the reference's
    pykeen-on-one-GPU step.  The driver trainer executes the triple
@@ -27,9 +27,9 @@ Spark-first split of responsibilities (SURVEY M2):
    et al. 2013 and successors).  Parity target is metric-band, not
    vector equality (SURVEY §6 risk register).  The driver trainer
    already holds every entity vector, so it also scores there, as
-   the reference does: :func:`driver_topk` is the exact cosine top-k
-   of ``topk_by_cosine``/``topk_by_cosine_broadcast``, bit for bit,
-   and Spark only receives the finished (user, item, rank) rows.
+   the reference does: ``recommend.driver_topk`` (shared with
+   node2vec) is the exact cosine top-k of ``topk_by_cosine``, bit for
+   bit, and Spark only receives the finished (user, item, rank) rows.
    LSH scoring still runs in Spark.
 
 Models: transe, transh, transr, transd, rotate, distmult, complex,
@@ -45,11 +45,20 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from .recommend import Recommender, topk_by_cosine
+from .recommend import (
+    MAX_DRIVER_TRIPLES,
+    Recommender,
+    _sorted_codes,
+    check_scoring,
+    collect_pairs,
+    driver_recommendations,
+    topk_by_cosine,
+    topk_by_cosine_lsh,
+    zero_filled_vectors,
+)
 
 # ---------------------------------------------------------------- indexing
 
@@ -77,14 +86,6 @@ def index_entities(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ents, rels
 
 
-# Driver-collect ceiling for the single-node SGD stage. The triples
-# arrive as Arrow string columns, ~3 short strings per row: 50M triples
-# is a few GB on the driver, the most a driver JVM/Python pair
-# comfortably holds. Beyond it, fail fast with the scale path spelled
-# out rather than OOM-ing the driver mid-collect.
-MAX_DRIVER_TRIPLES = 50_000_000
-
-
 def indexed_triples_df(
     triples: DataFrame, ents: DataFrame, rels: DataFrame
 ) -> DataFrame:
@@ -102,16 +103,6 @@ def indexed_triples_df(
         .withColumnRenamed("idx", "t")
         .select("h", "r", "t")
     )
-
-
-def _sorted_codes(values: pa.ChunkedArray) -> tuple[pa.Array, np.ndarray]:
-    """(sorted distinct values, each value's position among them).
-    Arrow sorts strings by their UTF-8 bytes and here puts a null
-    first, Spark's ascending string order, so the positions are the
-    ids ``index_entities`` assigns."""
-    names = pc.unique(values)
-    names = names.take(pc.array_sort_indices(names, null_placement="at_start"))
-    return names, pc.index_in(values, value_set=names).to_numpy()
 
 
 def collect_triples(
@@ -1280,144 +1271,6 @@ def embeddings_to_df(
     return ents.join(vdf, "idx").select("e", "vec")
 
 
-def named_embeddings_df(spark, names: pa.Array, vecs: np.ndarray) -> DataFrame:
-    """M4 for the driver trainer: (e, vec) straight from the driver-side
-    entity names (``names[i]`` is entity ``i``, its vector ``vecs[i]``),
-    no id join."""
-    rows = list(zip(names.to_pylist(), vecs.tolist()))
-    return spark.createDataFrame(rows, "e string, vec array<double>")
-
-
-def collect_pairs(train: DataFrame) -> pa.Table:
-    """The train (user_id, item_id) pairs on the driver, for
-    :func:`driver_topk`: one Arrow collect of at most
-    ``MAX_DRIVER_TRIPLES + 1`` rows, refused past the cap. Called after
-    :func:`collect_triples`, whose guard already bounds the rated pairs;
-    the limit bounds the pairs whose null rating made no triple."""
-    cap = MAX_DRIVER_TRIPLES
-    tbl = train.select("user_id", "item_id").limit(cap + 1).toArrow()
-    if tbl.num_rows > cap:
-        raise ValueError(
-            f"refusing to score more than {cap:,} train ratings on the "
-            "driver: use KGERecommender(trainer='sharded'), whose embeddings "
-            "and scoring stay on the cluster"
-        )
-    return tbl
-
-
-# Users per block of :func:`driver_topk`. A block holds a few (block x
-# items) arrays, so the scorer's memory grows with the item catalog and
-# never with the number of users.
-_TOPK_BLOCK = 256
-
-
-def _typed_vectors(
-    ids: pa.Array, prefix: str, names: pa.Array, vecs: np.ndarray
-) -> np.ndarray:
-    """Each id's entity vector (entity ``prefix + id``); zeros for a null
-    id or an id with no entity, as the Spark path's left join fills."""
-    pos = pc.index_in(pc.binary_join_element_wise(prefix, ids, ""), value_set=names)
-    pos = pos.fill_null(-1).to_numpy()
-    out = np.zeros((len(ids), vecs.shape[1]))
-    out[pos >= 0] = vecs[pos[pos >= 0]]
-    return out
-
-
-def _unit_rows(x: np.ndarray) -> np.ndarray:
-    """``x / norm`` for each row whose norm is positive — the scorers'
-    ``normed`` with the same bits: the squares are summed left to right
-    from 0.0, as ``aggregate`` folds them (BLAS would reorder the sum)."""
-    sq = np.zeros(len(x))
-    for j in range(x.shape[1]):
-        sq += x[:, j] * x[:, j]
-    norm = np.sqrt(sq)
-    out = x.copy()
-    pos = norm > 0
-    out[pos] /= norm[pos, None]
-    return out
-
-
-def _neg_dots(u: np.ndarray, items_t: np.ndarray) -> np.ndarray:
-    """``-(u . item)`` for every (row of ``u``, column of ``items_t``),
-    each dot summed left to right from 0.0 as ``aggregate(zip_with(...))``
-    folds it. One user at a time: the scalar-times-item-row products
-    then stay in cache, four times faster than a (users x items)
-    broadcast."""
-    out = np.zeros((len(u), items_t.shape[1]))
-    prod = np.empty(items_t.shape[1])
-    for user, acc in zip(u, out):
-        for x, item_col in zip(user, items_t):
-            np.multiply(item_col, x, out=prod)
-            acc += prod
-    return np.negative(out, out=out)
-
-
-def driver_topk(
-    pairs: pa.Table, names: pa.Array, vecs: np.ndarray, k: int,
-    all_recs: bool = False,
-) -> pa.Table:
-    """Exact cosine top-k on the driver: (user_id, item_id, rank) rows
-    equal to those of :func:`~.recommend.topk_by_cosine` and
-    :func:`~.recommend.topk_by_cosine_broadcast` fed the
-    ``KGERecommender`` vectors, row for row.
-
-    ``pairs`` are the train (user_id, item_id) strings, ``names[i]`` is
-    entity ``i`` and ``vecs[i]`` its vector. Users and items are the
-    distinct ids of ``pairs``; one with no ``u:``/``i:`` entity scores
-    with a zero vector. Per user, items sort by score descending, then
-    id ascending in UTF-8 byte order with a null id first (NaN scores
-    last, as the broadcast scorer's sort puts them); rated items drop
-    out and the first ``k`` stay (every unseen item with ``all_recs``).
-    A null id never matches a rating, as in Spark's joins.
-
-    Users are scored ``_TOPK_BLOCK`` at a time. In each block the rated
-    items' keys become NaN, and a user's candidates are every item
-    whose key is at most the user's k-th smallest (``np.partition``,
-    ties included), so the exact sort sees about k items per user.
-    """
-    users, u_code = _sorted_codes(pairs.column("user_id"))
-    items, i_code = _sorted_codes(pairs.column("item_id"))
-    uv = _unit_rows(_typed_vectors(users, "u:", names, vecs))
-    items_t = np.ascontiguousarray(_unit_rows(_typed_vectors(items, "i:", names, vecs)).T)
-    n_items = len(items)
-    rated = (pc.is_valid(pairs.column("user_id")).to_numpy()
-             & pc.is_valid(pairs.column("item_id")).to_numpy())
-    ru, ri = u_code[rated], i_code[rated]
-    order = np.argsort(ru, kind="stable")
-    ru, ri = ru[order], ri[order]
-    starts = np.searchsorted(ru, np.arange(len(users) + 1))
-    empty = np.zeros(0, np.int64)
-    out_u, out_i, out_r = [empty], [empty], [empty]
-    for lo in range(0, len(users), _TOPK_BLOCK):
-        hi = min(lo + _TOPK_BLOCK, len(users))
-        key = _neg_dots(uv[lo:hi], items_t)
-        seen = np.zeros(key.shape, dtype=bool)
-        seen[ru[starts[lo]:starts[hi]] - lo, ri[starts[lo]:starts[hi]]] = True
-        key[seen] = np.nan
-        if all_recs or k >= n_items:
-            cand = ~seen
-        else:
-            kth = np.partition(key, k - 1, axis=1)[:, k - 1 : k]
-            cand = key <= kth  # a NaN key, rated ones included, is never <=
-            short = np.isnan(kth[:, 0])  # fewer than k non-NaN keys: keep all
-            cand[short] = ~seen[short]
-        row, col = np.nonzero(cand)
-        # lexsort: last key first; a NaN key sorts last, -0.0 equals 0.0
-        order = np.lexsort((col, key[row, col], row))
-        row, col = row[order], col[order]
-        rank = np.arange(1, len(row) + 1) - np.searchsorted(row, row)
-        if not all_recs:
-            row, col, rank = row[rank <= k], col[rank <= k], rank[rank <= k]
-        out_u.append(row + lo)
-        out_i.append(col)
-        out_r.append(rank)
-    return pa.table({
-        "user_id": users.take(np.concatenate(out_u)),
-        "item_id": items.take(np.concatenate(out_i)),
-        "rank": pa.array(np.concatenate(out_r), pa.int32()),
-    })
-
-
 class KGERecommender(Recommender):
     """Any-of-9 KGE model + shared cosine top-k scoring path.
 
@@ -1429,12 +1282,12 @@ class KGERecommender(Recommender):
     The driver trainer keeps what scoring needs on the driver — the
     entity names and vectors, and the train (user_id, item_id) pairs
     from one bounded Arrow collect — and leaves nothing persisted in
-    Spark. Its ``exact`` and ``broadcast`` scoring is
-    :func:`driver_topk`, bit-identical to the Spark scorers of those
-    names, handed to Spark as one Arrow-backed DataFrame; ``lsh``
-    scoring builds its inputs from the driver-held data and runs in
-    Spark. The partitioned and sharded trainers keep the train frame
-    and the entity vectors persisted in Spark and score there.
+    Spark, and scores through ``recommend.driver_recommendations``:
+    ``exact`` is ``recommend.driver_topk`` on the driver, ``lsh`` runs
+    in Spark on inputs built from the driver-held data. The partitioned
+    and sharded trainers keep the train frame and the entity vectors
+    persisted in Spark and score there (``topk_by_cosine`` or LSH).
+    ``scoring`` is ``exact`` or ``lsh``.
     """
 
     def __init__(self, model: str = "transe", k: int = 5, dim: int = 32,
@@ -1443,18 +1296,13 @@ class KGERecommender(Recommender):
                  n_negatives: int = 1, adversarial_alpha: float | None = None,
                  all_recs: bool = False, trainer: str = "driver",
                  n_partitions: int = 8):
-        if all_recs and scoring == "lsh":
-            raise ValueError(
-                "all_recs needs the exact scoring path: LSH only surfaces "
-                "same-bucket candidates, so it cannot rank EVERY item"
-            )
+        check_scoring(scoring, all_recs)
         self.all_recs = all_recs
         self.model_name, self.k, self.dim = model, k, dim
         self.epochs, self.lr, self.margin, self.seed = epochs, lr, margin, seed
         self.scoring = scoring  # "exact" (parity) | "lsh" (scale)
         self.n_negatives = n_negatives
         self.adversarial_alpha = adversarial_alpha
-        assert scoring in ("exact", "lsh", "broadcast"), scoring
         # "driver" = reference-parity single-node SGD (one guarded
         # Arrow collect of the string triples, indexed on the driver —
         # collect_triples); "partitioned" = distributed partition-wise
@@ -1462,7 +1310,11 @@ class KGERecommender(Recommender):
         # "sharded" = partitioned SGD with the parameter tables ALSO
         # kept as a DataFrame across epochs (train_kge_sharded — the
         # 100 TB path where even the entity table outgrows the driver)
-        assert trainer in ("driver", "partitioned", "sharded"), trainer
+        if trainer not in ("driver", "partitioned", "sharded"):
+            raise ValueError(
+                "trainer must be 'driver', 'partitioned' or 'sharded', "
+                f"got {trainer!r}"
+            )
         self.trainer = trainer
         self.n_partitions = n_partitions
         self._spark = None
@@ -1524,40 +1376,17 @@ class KGERecommender(Recommender):
         self._emb = embeddings_to_df(spark, m, ents).persist()
         return self
 
-    def _typed(self, emb: DataFrame, prefix: str, id_col: str,
-               ids: DataFrame) -> DataFrame:
-        have = emb.filter(F.col("e").startswith(prefix)).select(
-            F.expr(f"substring(e, {len(prefix) + 1})").alias(id_col), "vec"
-        )
-        zero = F.array_repeat(F.lit(0.0), self.dim)
-        return ids.join(have, id_col, "left").select(
-            id_col, F.coalesce("vec", zero).alias("vec")
-        )
-
     def get_recommendations(self, k: int | None = None) -> DataFrame:
         assert self._train is not None or self._driver is not None, "call train() first"
         k = k or self.k
         if self._driver is not None:
-            pairs, names, vecs = self._driver
-            if self.scoring != "lsh":
-                return self._spark.createDataFrame(
-                    driver_topk(pairs, names, vecs, k, self.all_recs),
-                    "user_id string, item_id string, rank int",
-                )
-            train = self._spark.createDataFrame(pairs)
-            emb = named_embeddings_df(self._spark, names, vecs)
-        else:
-            train, emb = self._train.select("user_id", "item_id"), self._emb
-        uv = self._typed(emb, "u:", "user_id", train.select("user_id").distinct())
-        iv = self._typed(emb, "i:", "item_id", train.select("item_id").distinct())
-        if self.scoring == "lsh":
-            from .recommend import topk_by_cosine_lsh
-
-            return topk_by_cosine_lsh(uv, iv, k=k, train=train)
-        if self.scoring == "broadcast":
-            from .recommend import topk_by_cosine_broadcast
-
-            return topk_by_cosine_broadcast(
-                uv, iv, k=k, train=train, all_recs=self.all_recs
+            return driver_recommendations(
+                self._spark, *self._driver, k, self.scoring, self.all_recs
             )
+        train = self._train.select("user_id", "item_id")
+        users, items = train.select("user_id").distinct(), train.select("item_id").distinct()
+        uv = zero_filled_vectors(self._emb, "u:", "user_id", users, self.dim)
+        iv = zero_filled_vectors(self._emb, "i:", "item_id", items, self.dim)
+        if self.scoring == "lsh":
+            return topk_by_cosine_lsh(uv, iv, k=k, train=train)
         return topk_by_cosine(uv, iv, k=k, train=train, all_recs=self.all_recs)

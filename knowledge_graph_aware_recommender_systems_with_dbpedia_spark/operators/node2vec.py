@@ -11,24 +11,38 @@ model.py:43-149`` re-expressed Spark-first):
     softmax, MLlib uses negative sampling — bitwise vector parity is
     unattainable; the acceptance target is metric-band parity;
  4. cosine top-k scoring with the reference's exact
-    over-fetch -> anti-join(rated) -> truncate-to-k pattern
-    (recommend.topk_by_cosine).
+    over-fetch -> anti-join(rated) -> truncate-to-k pattern, on the
+    driver as the reference scores (``recommend.driver_topk``, the
+    rows of ``recommend.topk_by_cosine``): the Word2Vec vectors, which
+    MLlib's model already holds on the driver, and the train pairs
+    come over in one Arrow collect each.
 
 Entities absent from the walk vocabulary (Word2Vec minCount prunes
 them) get zero vectors, matching the reference's zero-fill
 (``transE/model.py:111-135``).
 
-Scale: walks + Word2Vec are both distributed; the exact cosine path is
-the parity/small path — swap in similarity.cosine_lsh_topk for the
-100 TB candidate-generation plan.
+Scale: walks + Word2Vec are distributed; scoring is not. More than
+``recommend.MAX_DRIVER_TRIPLES`` train ratings are refused with a
+``ValueError`` before the walks: at that size the exact Spark scorer
+is an O(users x items) cross join (1,141 s for rec_kge_transe_top5 at
+sf0.1 on 4 cores), and ``scoring="lsh"`` still needs the pairs on the
+driver.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .recommend import Recommender, topk_by_cosine
+from .recommend import (
+    Recommender,
+    check_scoring,
+    collect_pairs,
+    driver_recommendations,
+)
 from .walks import random_walks
 
 _U = "u:"
@@ -49,7 +63,8 @@ class Node2VecRecommender(Recommender):
     Parameters mirror the reference's deep-walk config
     (``deep_walk_based/model.py:16-41``): walk_number/walk_length,
     p/q (parity default 1.0 — see walks.py quirk note), embedding
-    vector_size/window/epochs, seed.
+    vector_size/window/epochs, seed. ``scoring`` is ``exact`` or
+    ``lsh``; ``train`` leaves nothing persisted in Spark.
     """
 
     def __init__(
@@ -68,16 +83,9 @@ class Node2VecRecommender(Recommender):
         all_recs: bool = False,
         corpus_partitions: int = 64,
     ):
-        if all_recs and scoring == "lsh":
-            raise ValueError(
-                "all_recs needs the exact scoring path: LSH only surfaces "
-                "same-bucket candidates, so it cannot rank EVERY item"
-            )
+        check_scoring(scoring, all_recs)
         self.all_recs = all_recs
-        # "exact" (parity) | "lsh" (scale) | "broadcast" (exact,
-        # zero-shuffle scoring for bounded item catalogs)
-        assert scoring in ("exact", "lsh", "broadcast"), scoring
-        self.scoring = scoring
+        self.scoring = scoring  # "exact" (parity) | "lsh" (scale)
         self.k = k
         self.n_walks = n_walks
         self.walk_len = walk_len
@@ -97,17 +105,41 @@ class Node2VecRecommender(Recommender):
         if corpus_partitions < 1:
             raise ValueError(f"corpus_partitions must be >= 1: {corpus_partitions}")
         self.corpus_partitions = corpus_partitions
-        self._train: DataFrame | None = None
-        self._vectors: DataFrame | None = None
+        self._spark = None
+        # (train pairs, vocabulary words, their vectors)
+        self._driver: tuple[pa.Table, pa.Array, np.ndarray] | None = None
 
     def train(
         self, train_ratings: DataFrame, extra_edges: DataFrame | None = None
     ) -> "Node2VecRecommender":
+        self._spark = train_ratings.sparkSession
+        self._driver = None
+        train = train_ratings.select("user_id", "item_id").persist()
+        try:
+            # the guarded collect refuses an oversized input before the
+            # walks, and fills train's cache for them
+            pairs = collect_pairs(train.select(
+                F.col("user_id").cast("string").alias("user_id"),
+                F.col("item_id").cast("string").alias("item_id"),
+            ))
+            vocab = self._word_vectors(train, extra_edges)
+        finally:
+            train.unpersist()
+        vecs = pc.list_flatten(vocab.column("vec")).to_numpy()
+        self._driver = (
+            pairs,
+            vocab.column("word").combine_chunks(),
+            vecs.reshape(-1, self.vector_size),
+        )
+        return self
+
+    def _word_vectors(self, train: DataFrame, extra_edges: DataFrame | None) -> pa.Table:
+        """Walks over the rating graph, then Word2Vec: (word, vec) for
+        every vocabulary node, collected from the fitted model."""
         from pyspark.ml.feature import Word2Vec
         from pyspark.ml.functions import vector_to_array
 
-        self._train = train_ratings.select("user_id", "item_id").persist()
-        edges = ratings_to_edges(self._train)
+        edges = ratings_to_edges(train)
         if extra_edges is not None:  # has_property / social from a KGraph
             edges = edges.unionByName(extra_edges.select("src", "dst"))
         walks = random_walks(
@@ -138,45 +170,14 @@ class Node2VecRecommender(Recommender):
             outputCol="_emb",
         )
         model = w2v.fit(walks)
-        self._vectors = (
+        return (
             model.getVectors()
             .select(F.col("word"), vector_to_array("vector").alias("vec"))
-            .persist()
-        )
-        return self
-
-    def _typed_vecs(self, prefix: str, id_col: str, ids: DataFrame) -> DataFrame:
-        """Vectors for one node type; zero-fill entities missing from
-        the vocabulary (reference transE/model.py:111-135)."""
-        assert self._vectors is not None
-        have = self._vectors.filter(F.col("word").startswith(prefix)).select(
-            F.expr(f"substring(word, {len(prefix) + 1})").alias(id_col),
-            F.col("vec"),
-        )
-        zero = F.array_repeat(F.lit(0.0), self.vector_size)
-        return ids.join(have, id_col, "left").select(
-            id_col, F.coalesce("vec", zero).alias("vec")
+            .toArrow()
         )
 
     def get_recommendations(self, k: int | None = None) -> DataFrame:
-        assert self._train is not None, "call train() first"
-        k = k or self.k
-        train_str = self._train.select(
-            F.col("user_id").cast("string").alias("user_id"),
-            F.col("item_id").cast("string").alias("item_id"),
+        assert self._driver is not None, "call train() first"
+        return driver_recommendations(
+            self._spark, *self._driver, k or self.k, self.scoring, self.all_recs
         )
-        users = train_str.select("user_id").distinct()
-        items = train_str.select("item_id").distinct()
-        uv = self._typed_vecs(_U, "user_id", users)
-        iv = self._typed_vecs(_I, "item_id", items)
-        if self.scoring == "lsh":
-            from .recommend import topk_by_cosine_lsh
-
-            return topk_by_cosine_lsh(uv, iv, k=k, train=train_str)
-        if self.scoring == "broadcast":
-            from .recommend import topk_by_cosine_broadcast
-
-            return topk_by_cosine_broadcast(
-                uv, iv, k=k, train=train_str, all_recs=self.all_recs
-            )
-        return topk_by_cosine(uv, iv, k=k, train=train_str, all_recs=self.all_recs)

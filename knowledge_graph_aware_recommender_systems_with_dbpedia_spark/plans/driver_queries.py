@@ -1896,6 +1896,9 @@ SELECT user_id, item_id, CAST(rec_rank AS BIGINT) AS rec_rank FROM rk WHERE rec_
 def rec_node2vec_top5(spark, sf_dir):
     """G6/G7 + M1 + O3/J6/O4: walks -> Word2Vec -> cosine top-5.
 
+    Walks and Word2Vec run in Spark; the driver, which holds the
+    Word2Vec vectors, scores the exact cosine top-5
+    (operators/recommend.driver_topk) and hands Spark the ranked rows.
     No DuckDB oracle: Word2Vec embeddings are stochastic (seeded but
     engine-internal) — the driver's rows-only check applies; exact
     semantics are covered by tests/test_walks_node2vec.py.
@@ -1938,7 +1941,7 @@ def rec_kge_transe_top5(spark, sf_dir):
     The KGE SGD stage is single-node by design (SURVEY M2, the
     reference's pykeen step); Spark builds the triples, and the driver,
     which holds the entity vectors, scores the exact cosine top-5
-    (operators/kge.driver_topk) and hands Spark the ranked rows.
+    (operators/recommend.driver_topk) and hands Spark the ranked rows.
     No DuckDB oracle (iterative stochastic training) — rows-only
     check; gradient/learning semantics covered by tests/test_kge.py.
     """
@@ -2177,8 +2180,11 @@ def rec_fixed_emb_top5(spark, sf_dir):
     simulate vocabulary misses and get zero-filled vectors (score 0,
     ranked last by item-id tie-break) — reference zero-fill semantics
     transE/model.py:111-135, scoring contract deep_walk_based/
-    model.py:62-86. Everything downstream of the vectors is the same
-    library code path rec_node2vec/rec_kge use (RC.topk_by_cosine)."""
+    model.py:62-86. Everything downstream of the vectors is
+    RC.topk_by_cosine, the exact scorer of the Spark-resident KGE
+    trainers (rec_kge_sharded_*); rec_node2vec and rec_kge_transe hold
+    their vectors on the driver and score with RC.driver_topk, which
+    returns the same rows (tests/test_kge.py)."""
     train, _ = SP.train_test(_user_split(spark, sf_dir))
     train_ui = train.select("user_id", "item_id")
     # deterministic user subset (the ss1 vec_id<8 pattern): the exact

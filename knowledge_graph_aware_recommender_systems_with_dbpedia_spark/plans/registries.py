@@ -46,6 +46,7 @@ def _deepwalk(parameters: dict, seed: int):
 def _kge(kind: str):
     def make(parameters: dict, seed: int):
         p = parameters
+        scoring = p.get("scoring", "exact")
         return KGERecommender(
             model=kind,
             dim=p.get("embedding_dim", p.get("embedding_size", 32)),
@@ -53,7 +54,8 @@ def _kge(kind: str):
             lr=p.get("lr", 0.05),
             margin=p.get("margin", 1.0),
             seed=p.get("seed", seed),
-            scoring=p.get("scoring", "exact"),
+            # "broadcast" named a deleted exact scorer with the same rows
+            scoring="exact" if scoring == "broadcast" else scoring,
             n_negatives=p.get("n_negatives", 1),
             adversarial_alpha=p.get("adversarial_alpha"),
             # reference configs never set these (driver = the pykeen-

@@ -3,6 +3,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators import kge
+from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators import recommend as RC
+from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.node2vec import Node2VecRecommender
 
 
 def _make(model, rng_seed=7, n_ent=9, n_rel=3, dim=4):
@@ -244,19 +246,29 @@ def test_driver_train_refuses_too_many_pairs(spark, monkeypatch):
         [(1, 1, 5.0), (2, 2, None), (3, 1, None)], "user_id int, item_id int, rating double"
     )
     cached = _persisted_rdds(spark)
-    monkeypatch.setattr(kge, "MAX_DRIVER_TRIPLES", 2)
+    monkeypatch.setattr(RC, "MAX_DRIVER_TRIPLES", 2)
     with pytest.raises(ValueError, match="refusing to score more than 2 train ratings"):
         kge.KGERecommender("transe", k=3, dim=4, epochs=1).train(ratings)
     assert _persisted_rdds(spark) == cached
 
 
-def test_driver_recommendations_run_one_job(spark):
-    """A driver-trained model scores on the driver: its recommendations
-    reach pandas in the one job that reads the Arrow-backed frame."""
+_DRIVER_MODELS = {
+    "kge": lambda: kge.KGERecommender("transe", k=3, dim=4, epochs=1, seed=3),
+    "node2vec": lambda: Node2VecRecommender(
+        k=3, n_walks=2, walk_len=4, vector_size=4, seed=3, corpus_partitions=2
+    ),
+}
+
+
+@pytest.mark.parametrize("model", sorted(_DRIVER_MODELS))
+def test_driver_recommendations_run_one_job(spark, model):
+    """A model whose vectors are on the driver scores there: its
+    recommendations reach pandas in the one job that reads the
+    Arrow-backed frame."""
     rows = [(u, i, float(1 + (u * i) % 5)) for u in range(30) for i in range(u % 5, 25, 4)]
     rows += [(99, i, 3.0) for i in range(25)]  # nothing unseen: no rows
     ratings = spark.createDataFrame(rows, "user_id int, item_id int, rating double")
-    rec = kge.KGERecommender("transe", k=3, dim=4, epochs=1, seed=3).train(ratings)
+    rec = _DRIVER_MODELS[model]().train(ratings)
     got = []
     assert _job_count(spark, lambda: got.append(rec.get_recommendations(3).toPandas())) <= 1
     assert len(got[0]) == 30 * 3 and "99" not in set(got[0]["user_id"])
@@ -280,31 +292,44 @@ def test_driver_scorer_sums_left_to_right():
         norm = float(np.sqrt(fold(x * x for x in v)))
         return [x / norm for x in v] if norm > 0 else list(v)
 
-    un, itn = kge._unit_rows(u), kge._unit_rows(it)
+    un, itn = RC._unit_rows(u), RC._unit_rows(it)
     assert un.tolist() == [unit(v) for v in u] and itn.tolist() == [unit(v) for v in it]
     want = [[-fold(a * b for a, b in zip(x, y)) for y in itn.tolist()] for x in un.tolist()]
-    assert kge._neg_dots(un, np.ascontiguousarray(itn.T)).tolist() == want
+    assert RC._neg_dots(un, np.ascontiguousarray(itn.T)).tolist() == want
 
 
 _ZZ, _SMILE = "\uff5a", "\U0001f600"  # UTF-8 order: U+FF5A first; UTF-16: U+1F600
 
 
+def _rows_of(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _topk_by_cosine_rows(spark, driver, k, all_recs):
+    """``topk_by_cosine``'s rows for driver-held (pairs, names, vecs)."""
+    pairs, names, vecs = driver
+    emb = spark.createDataFrame(
+        list(zip(names.to_pylist(), vecs.tolist())), "e string, vec array<double>"
+    )
+    train = spark.createDataFrame(pairs)
+    dim = vecs.shape[1]
+    uv = RC.zero_filled_vectors(emb, "u:", "user_id", train.select("user_id").distinct(), dim)
+    iv = RC.zero_filled_vectors(emb, "i:", "item_id", train.select("item_id").distinct(), dim)
+    return _rows_of(RC.topk_by_cosine(uv, iv, k=k, train=train, all_recs=all_recs))
+
+
 @pytest.mark.parametrize("all_recs,k", [(False, 3), (False, 40), (True, 3)])
 def test_driver_topk_matches_spark_scorers(spark, all_recs, k):
-    """The driver scorer's rows equal both Spark scorers' rows, fed the
+    """The driver scorer's rows equal ``topk_by_cosine``'s rows, fed the
     same vectors: more users than one block, exact score ties broken by
     UTF-8 byte order, a zero-vector user, a user who rated every item,
-    k above the unseen count (k=40, 23 items), all_recs, and null ids."""
-    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.recommend import (
-        topk_by_cosine,
-        topk_by_cosine_broadcast,
-    )
-
+    k above the unseen count (k=40, 23 items), all_recs, null ids, and
+    NaN and inf item vectors (NaN scores rank last)."""
     items = [f"m{i}" for i in range(20)] + [_SMILE, _ZZ, "Zoë"]
     rng = np.random.default_rng(11)
     rows = [
         (u, items[i], float(rng.integers(1, 6)))
-        for u in range(kge._TOPK_BLOCK + 40)
+        for u in range(RC._TOPK_BLOCK + 40)
         for i in rng.choice(len(items), rng.integers(1, 6), replace=False)
     ]
     rows += [(9000, it, 4.0) for it in items]  # rated every item
@@ -320,29 +345,41 @@ def test_driver_topk_matches_spark_scorers(spark, all_recs, k):
     for e in (f"i:{_ZZ}", f"i:{_SMILE}", "i:m1", "i:m2"):  # exact score ties
         vecs[pos[e]] = vecs[pos["i:m0"]]
     vecs[pos["u:1"]] = vecs[pos["u:0"]]
+    vecs[pos["i:m3"], 1] = np.nan
+    vecs[pos["i:m4"], 2] = -np.inf
 
-    def rows_of(df):
-        return sorted((tuple(r) for r in df.collect()), key=repr)
-
-    driver = rows_of(rec.get_recommendations())
-    emb = kge.named_embeddings_df(spark, names, vecs)
-    train = spark.createDataFrame(pairs)
-    uv = rec._typed(emb, "u:", "user_id", train.select("user_id").distinct())
-    iv = rec._typed(emb, "i:", "item_id", train.select("item_id").distinct())
-    assert driver == rows_of(topk_by_cosine(uv, iv, k=k, train=train, all_recs=all_recs))
-    assert driver == rows_of(
-        topk_by_cosine_broadcast(uv, iv, k=k, train=train, all_recs=all_recs)
-    )
+    driver = _rows_of(rec.get_recommendations())
+    assert driver == _topk_by_cosine_rows(spark, rec._driver, k, all_recs)
     # no rating matches the null item, so it is all user 9000 has unseen
     assert [(i, r) for u, i, r in driver if u == "9000"] == [(None, 1)]
     # every score of the zero-vector user is 0.0: the null item, then
-    # byte order, without the rated m0
-    zero_user = sorted((r, i) for u, i, r in driver if u == "9001")
-    assert [i for _, i in zero_user[:3]] == [None, "Zoë", "m1"]
+    # byte order, without the rated m0; the NaN-scored items come last
+    zero_user = [i for _, i in sorted((r, i) for u, i, r in driver if u == "9001")]
+    assert zero_user[:3] == [None, "Zoë", "m1"]
     if all_recs:
+        assert zero_user[-2:] == ["m3", "m4"]
         ranks = {(u, i): r for u, i, r in driver}
         tied = {u for u, _, _ in driver if (u, _ZZ) in ranks and (u, _SMILE) in ranks}
         assert tied and all(ranks[(u, _ZZ)] < ranks[(u, _SMILE)] for u in tied)
+
+
+@pytest.mark.parametrize("all_recs,k", [(False, 3), (True, 3)])
+def test_node2vec_driver_rows_match_topk_by_cosine(spark, all_recs, k):
+    """node2vec scores on the driver with the rows ``topk_by_cosine``
+    returns for its collected vectors, including the zero-filled ids
+    that Word2Vec's minCount drops from the vocabulary."""
+    rows = [(u, i) for u in range(40) for i in range(u % 7, 30, 1 + u % 4)]
+    rows += [(100, 29), (101, 28)]  # item 29 has few ratings
+    ratings = spark.createDataFrame(rows, "user_id int, item_id int")
+    rec = Node2VecRecommender(
+        k=k, n_walks=2, walk_len=4, vector_size=6, min_count=6, seed=9,
+        all_recs=all_recs, corpus_partitions=2,
+    ).train(ratings)
+    pairs, names, vecs = rec._driver
+    assert 0 < len(names) < 40 + 30  # minCount dropped some ids
+    assert _rows_of(rec.get_recommendations()) == _topk_by_cosine_rows(
+        spark, rec._driver, k, all_recs
+    )
 
 
 @pytest.mark.slow

@@ -110,68 +110,42 @@ def test_all_recs_rejected_on_lsh_scoring():
         Node2VecRecommender(scoring="lsh", all_recs=True)
 
 
-@pytest.mark.slow
-def test_topk_by_cosine_broadcast_equals_windowed(spark):
-    """The zero-shuffle broadcast-array scorer must be row-for-row
-    identical to the windowed crossJoin scorer (same dots, same
-    (score desc, item) order, same anti-join semantics), including
-    zero vectors and users whose top items are all rated."""
-    import numpy as np
+@pytest.mark.parametrize("kwargs,allowed", [
+    ({"scoring": "broadcast"}, "'exact' or 'lsh'"),
+    ({"trainer": "local"}, "'driver', 'partitioned' or 'sharded'"),
+])
+def test_bad_scoring_or_trainer_rejected(kwargs, allowed):
+    """Config values are checked with a ValueError naming the allowed
+    values, not an assert that ``python -O`` strips."""
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.kge import KGERecommender
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.node2vec import Node2VecRecommender
 
-    rng = np.random.RandomState(17)
-    users = [(f"u{i}", [float(x) for x in rng.randn(6)]) for i in range(25)]
-    users.append(("uz", [0.0] * 6))  # zero vector
-    items = [(f"i{j}", [float(x) for x in rng.randn(6)]) for j in range(40)]
-    items.append(("iz", [0.0] * 6))
-    uv = spark.createDataFrame(users, "user_id string, vec array<double>")
-    iv = spark.createDataFrame(items, "item_id string, vec array<double>")
-    train_rows = [
-        (f"u{i}", f"i{j}") for i in range(25) for j in rng.choice(41, 5, replace=False)
-    ] + [("uz", "i0")]
-    train = spark.createDataFrame(
-        [(u, i if i != "i40" else "iz") for u, i in train_rows],
-        "user_id string, item_id string",
-    )
-    for k in (3, 7):
-        want = {
-            (r.user_id, r.rank): r.item_id
-            for r in RC.topk_by_cosine(uv, iv, k=k, train=train).collect()
-        }
-        got = {
-            (r.user_id, r.rank): r.item_id
-            for r in RC.topk_by_cosine_broadcast(uv, iv, k=k, train=train).collect()
-        }
-        assert got == want
-    # all_recs parity too
-    want = {
-        (r.user_id, r.rank): r.item_id
-        for r in RC.topk_by_cosine(uv, iv, k=1, train=train, all_recs=True).collect()
-    }
-    got = {
-        (r.user_id, r.rank): r.item_id
-        for r in RC.topk_by_cosine_broadcast(uv, iv, k=1, train=train, all_recs=True).collect()
-    }
-    assert got == want
+    with pytest.raises(ValueError, match=allowed):
+        KGERecommender(**kwargs)
+    if "scoring" in kwargs:
+        with pytest.raises(ValueError, match=allowed):
+            Node2VecRecommender(**kwargs)
 
 
-def test_topk_by_cosine_broadcast_zero_shuffle_scoring(spark):
-    """The scoring stage must be map-side only: no exchange between the
-    broadcast item join and the per-user slice (the only exchanges in
-    the whole plan feed the two tiny per-user/global aggregates)."""
-    uv = spark.createDataFrame([("u1", [1.0, 0.0])], "user_id string, vec array<double>")
+def test_topk_by_cosine_ranks_nan_scores_last(spark):
+    """A NaN score ranks after every number, in the over-fetch window
+    and in the final ranking, as the driver scorer ranks it; an inf
+    component normalizes to NaN."""
+    uv = spark.createDataFrame([("u", [1.0, 0.0])], "user_id string, vec array<double>")
     iv = spark.createDataFrame(
-        [("i1", [1.0, 0.0]), ("i2", [0.0, 1.0])], "item_id string, vec array<double>"
+        [("a", [1.0, 0.0]), ("b", [float("nan"), 0.0]), ("c", [0.0, 1.0]),
+         ("d", [float("inf"), 1.0])],
+        "item_id string, vec array<double>",
     )
-    train = spark.createDataFrame([("u1", "i1")], "user_id string, item_id string")
-    plan = (
-        RC.topk_by_cosine_broadcast(uv, iv, k=1, train=train)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # windowed scorer has per-user hashpartitioning exchanges + sort-
-    # merge anti-join; the broadcast plan must have NO window and no
-    # user_id, item_id anti-join exchange
-    assert "Window" not in plan
-    assert "LeftAnti" not in plan
+    train = spark.createDataFrame([("u", "a")], "user_id string, item_id string")
+
+    def items(df):
+        return [r.item_id for r in df.orderBy("rank").collect()]
+
+    # over-fetch 1 + 2 = 3 of 4 items: a, c, b (NaN first would keep b, d, a)
+    assert items(RC.topk_by_cosine(uv, iv, k=2, train=train)) == ["c", "b"]
+    assert items(RC.topk_by_cosine(uv, iv, k=1, train=train, all_recs=True)) == ["c", "b", "d"]
+    assert items(RC.topk_by_cosine(uv, iv, k=4)) == ["a", "c", "b", "d"]
 
 
 def test_salted_join_equals_plain_join(spark):

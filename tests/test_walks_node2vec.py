@@ -99,3 +99,20 @@ def test_node2vec_end_to_end(spark):
         ["user_id", "item_id"],
     ).count()
     assert overlap == 0
+
+
+def test_node2vec_releases_what_it_persists(spark):
+    """train() unpersists its train frame and keeps the vectors on the
+    driver, and scoring persists nothing."""
+    from pyspark import StorageLevel
+
+    rows = [(u, i) for u in range(10) for i in range(12) if (u + i) % 4 != 1]
+    train = spark.createDataFrame(rows, "user_id int, item_id int")
+    rec = Node2VecRecommender(
+        k=3, n_walks=2, walk_len=4, vector_size=4, seed=5, corpus_partitions=2
+    ).train(train)
+    assert train.select("user_id", "item_id").storageLevel == StorageLevel(False, False, False, False)
+    jsc = spark.sparkContext._jsc
+    cached = jsc.getPersistentRDDs().size()
+    assert len(rec.get_recommendations(3).toPandas()) == 10 * 3
+    assert jsc.getPersistentRDDs().size() == cached
