@@ -15,7 +15,7 @@ from .recommend import (
     topk_by_cosine_lsh,
 )
 from .node2vec import Node2VecRecommender
-from .kge import KGE_MODELS, KGERecommender, train_kge, train_kge_partitioned
+from .kge import KGE_MODELS, KGERecommender, train_kge
 from .walks import random_walks
 
 __all__ = [
@@ -39,6 +39,5 @@ __all__ = [
     "KGE_MODELS",
     "KGERecommender",
     "train_kge",
-    "train_kge_partitioned",
     "random_walks",
 ]

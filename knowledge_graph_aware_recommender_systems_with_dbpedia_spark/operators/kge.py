@@ -8,11 +8,10 @@ embeddings (``transE/model.py:78-151``).
 
 Spark-first split of responsibilities (SURVEY M2):
  * **Spark** builds the triples DataFrame (operators/graph.py
-   ``triples``); for the partitioned and sharded trainers it also
-   joins the learned embeddings back to users/items with zero-fill
-   for entities missing from training (M3,
-   ``transE/model.py:111-135``) and scores the cosine top-k
-   (``recommend.topk_by_cosine``);
+   ``triples``); for the sharded trainer it also joins the learned
+   embeddings back to users/items with zero-fill for entities missing
+   from training (M3, ``transE/model.py:111-135``) and scores the
+   cosine top-k (``recommend.topk_by_cosine``);
  * **the driver** runs the actual SGD — the one deliberately
    non-distributed stage, exactly like the reference's
    pykeen-on-one-GPU step.  The driver trainer executes the triple
@@ -20,7 +19,7 @@ Spark-first split of responsibilities (SURVEY M2):
    (:func:`collect_triples`, guarded by ``MAX_DRIVER_TRIPLES``) and
    are indexed there — entity/relation ids are the ranks of the
    sorted distinct names, the same ids :func:`index_entities` assigns
-   in Spark for the partitioned and sharded trainers, whose triples
+   in Spark for the sharded trainer, whose triples and parameters
    never leave the cluster.  pykeen/torch are not available here, so
    the 9 published scoring functions are implemented directly in
    numpy (margin ranking loss + uniform negative sampling — Bordes
@@ -90,9 +89,8 @@ def indexed_triples_df(
     triples: DataFrame, ents: DataFrame, rels: DataFrame
 ) -> DataFrame:
     """(h, r, t) dense-int triple DataFrame — the distributed form of
-    the training input for the partitioned and sharded trainers
-    (:func:`train_kge_partitioned`, :func:`train_kge_sharded`). Stays
-    on the cluster.
+    the training input for :func:`train_kge_sharded`. Stays on the
+    cluster.
     """
     return (
         triples.join(ents.withColumnRenamed("e", "head"), "head")
@@ -129,10 +127,8 @@ def collect_triples(
     graphs. At 100 TB, use :func:`train_kge_sharded` instead: triples
     AND parameters stay DataFrames (per-partition local SGD over
     equi-joined parameter slices, deltas summed and joined back
-    Spark-side) — nothing parameter-sized touches the driver;
-    :func:`train_kge_partitioned` is the mid-tier (parameters
-    driver-held). Both score in Spark from the final entity-vector
-    DataFrame.
+    Spark-side) — nothing parameter-sized touches the driver, and
+    scoring runs in Spark from the final entity-vector DataFrame.
     """
     from .graph import observed_metrics
 
@@ -150,10 +146,8 @@ def collect_triples(
                 "reference-scale graphs. For larger graphs use "
                 "train_kge_sharded (KGERecommender(trainer='sharded')): the "
                 "triples AND the parameter tables live on the cluster — "
-                "nothing parameter-sized ever touches the driver; "
-                "trainer='partitioned' is the mid-tier (triples stay "
-                "distributed, parameters driver-held). The resulting entity "
-                "vectors feed the unchanged scoring path either way."
+                "nothing parameter-sized ever touches the driver, and the "
+                "entity vectors are scored in Spark."
             )
         tbl = t.toArrow()
     finally:
@@ -466,8 +460,9 @@ def _run_epoch(
     n_negatives: int,
     adversarial_alpha: float | None,
 ) -> None:
-    """One SGD pass over ``triples_idx`` (shared by the single-node
-    and partitioned trainers — bit-identical batch logic)."""
+    """One SGD pass over ``triples_idx`` (shared by the driver trainer
+    and each partition of the sharded trainer — bit-identical batch
+    logic)."""
     n = len(triples_idx)
     n_ent = m.n_ent
     order = rng.permutation(n)
@@ -550,151 +545,24 @@ def _param_tables(m: _KGEModel) -> dict[str, np.ndarray]:
     """The model's numpy parameter tables (name -> array), sorted by
     name. Every trainable array a subclass creates is an instance
     attribute, so this is the generic transport surface for the
-    partitioned trainer — no per-model serialization code."""
+    sharded trainer — no per-model serialization code."""
     return {k: v for k, v in sorted(vars(m).items()) if isinstance(v, np.ndarray)}
-
-
-def train_kge_partitioned(
-    triples_idx_df: DataFrame,
-    n_ent: int,
-    n_rel: int,
-    model: str = "transe",
-    dim: int = 32,
-    epochs: int = 5,
-    lr: float = 0.05,
-    margin: float = 1.0,
-    batch_size: int = 1024,
-    seed: int = 42,
-    n_negatives: int = 1,
-    adversarial_alpha: float | None = None,
-    n_partitions: int = 8,
-) -> _KGEModel:
-    """Distributed KGE training: partition-wise SGD with per-epoch
-    parameter averaging (federated-averaging style). The MID-TIER
-    trainer: triples stay distributed but the parameter tables are
-    driver-held and the summed deltas round-trip through the driver
-    each epoch, so the ceiling is O(n_ent * dim) driver memory. For
-    graphs where the parameter table itself outgrows the driver, use
-    :func:`train_kge_sharded` (``KGERecommender(trainer='sharded')``)
-    — parameters live as a DataFrame across epochs and nothing
-    parameter-sized ever touches the driver; that is the 100 TB path.
-
-    Per epoch: current parameters are broadcast; each of
-    ``n_partitions`` deterministic triple partitions runs one local
-    SGD pass (the exact :func:`_run_epoch` batch logic) from the
-    broadcast snapshot; the SPARSE per-row parameter deltas (only
-    entities/relations a partition actually touched are nonzero) are
-    summed Spark-side with a groupBy — the triples and the per-
-    partition deltas never funnel through the driver; the driver
-    applies ``sum(delta)/n_partitions`` (equivalent to unweighted
-    model averaging) and re-projects onto the unit ball for the
-    translational family.
-
-    Driver memory holds ONE copy of the parameter tables (O(n_ent *
-    dim)) — the same footprint the scoring path needs anyway — while
-    the triple set is unbounded. Determinism: partition membership is
-    md5-derived from the triple itself, local order is sorted before a
-    seeded shuffle, and the local rng is seeded by (seed, epoch,
-    partition), so results are reproducible across runs and cluster
-    layouts.
-
-    Numerics differ from :func:`train_kge` (averaging vs one global
-    SGD sequence) — parity is metric-band, like the reference's own
-    GPU-nondeterminism stance (SURVEY §6).
-    """
-    import pandas as pd
-
-    from ..functions.hashing import md5_long
-
-    spark = triples_idx_df.sparkSession
-    model_cls = KGE_MODELS[model]
-    m = model_cls(n_ent, n_rel, dim, np.random.default_rng(seed))
-    translational = model in TRANSLATIONAL
-
-    parts = triples_idx_df.select(
-        F.col("h").cast("long"),
-        F.col("r").cast("long"),
-        F.col("t").cast("long"),
-        F.pmod(
-            md5_long(F.concat_ws(":", "h", "r", "t")), F.lit(n_partitions)
-        ).alias("part"),
-    ).persist()
-    out_schema = "tbl string, idx long, delta array<double>"
-
-    for epoch in range(epochs):
-        bc = spark.sparkContext.broadcast(
-            {k: np.ascontiguousarray(v) for k, v in _param_tables(m).items()}
-        )
-
-        def make_runner(_bc, _epoch):
-            def run_partition(key, pdf):
-                part_id = int(key[0])
-                local = model_cls(n_ent, n_rel, dim, np.random.default_rng(0))
-                for name, arr in _bc.value.items():
-                    setattr(local, name, arr.copy())
-                tri = (
-                    pdf[["h", "r", "t"]]
-                    .sort_values(["h", "r", "t"], kind="mergesort")
-                    .to_numpy(dtype=np.int64)
-                )
-                rng_l = np.random.default_rng([seed, _epoch, part_id])
-                _run_epoch(
-                    local, tri, rng_l, lr, margin, batch_size, n_negatives,
-                    adversarial_alpha,
-                )
-                rows: list[tuple[str, int, list[float]]] = []
-                for name, ref in _bc.value.items():
-                    delta = getattr(local, name) - ref
-                    flat = delta.reshape(len(delta), -1)
-                    touched = np.nonzero(np.any(flat != 0, axis=1))[0]
-                    comps = (
-                        ((":re", flat.real), (":im", flat.imag))
-                        if np.iscomplexobj(flat)
-                        else (("", flat),)
-                    )
-                    for suffix, mat in comps:
-                        for i in touched:
-                            rows.append(
-                                (name + suffix, int(i), [float(x) for x in mat[i]])
-                            )
-                return pd.DataFrame(rows, columns=["tbl", "idx", "delta"])
-
-            return run_partition
-
-        summed = (
-            parts.groupBy("part")
-            .applyInPandas(make_runner(bc, epoch), out_schema)
-            .select("tbl", "idx", F.posexplode("delta").alias("pos", "val"))
-            .groupBy("tbl", "idx", "pos")
-            .agg(F.sum("val").alias("s"))
-            .collect()
-        )
-        tables = _param_tables(m)
-        for row in summed:
-            name, _, suffix = row["tbl"].partition(":")
-            val = row["s"] / n_partitions
-            if suffix == "im":
-                val = 1j * val
-            tables[name][row["idx"]].reshape(-1)[row["pos"]] += val
-        bc.unpersist()
-        if translational:
-            m.normalize()
-    parts.unpersist()
-    return m
 
 
 def _table_kinds(
     model_cls, dim: int
-) -> tuple[dict[str, str], dict[str, tuple]]:
+) -> tuple[dict[str, str], dict[str, tuple], set[str]]:
     """Classify each of a model's parameter tables by what indexes its
     axis 0 — ``ent`` (entity-indexed), ``rel`` (relation-indexed), or
     ``global`` (shared, e.g. TuckER's core tensor) — by instantiating
-    a sentinel-sized template. Returns (kinds, row_shapes) keyed by
-    table name; row_shapes[name] is the per-row shape (axis 1+)."""
-    s_ent, s_rel = 101, 103  # primes no dim collides with
-    assert dim not in (s_ent, s_rel), f"dim={dim} collides with sentinels"
+    a sentinel-sized template. Returns (kinds, row_shapes,
+    complex_tables): kinds and row_shapes are keyed by table name,
+    row_shapes[name] is the per-row shape (axis 1+), and
+    complex_tables names the complex-valued tables."""
+    # a global table's axis 0 is at most dim, so these never collide
+    s_ent, s_rel = dim + 1, dim + 2
     tmpl = model_cls(s_ent, s_rel, dim, np.random.default_rng(0))
-    kinds, shapes = {}, {}
+    kinds, shapes, complex_tables = {}, {}, set()
     for name, arr in _param_tables(tmpl).items():
         kinds[name] = (
             "ent" if arr.shape[0] == s_ent
@@ -702,7 +570,9 @@ def _table_kinds(
             else "global"
         )
         shapes[name] = arr.shape[1:] if arr.ndim > 1 else (1,)
-    return kinds, shapes
+        if np.iscomplexobj(arr):
+            complex_tables.add(name)
+    return kinds, shapes, complex_tables
 
 
 def params_to_df(spark, m: _KGEModel) -> DataFrame:
@@ -869,8 +739,9 @@ def _normalize_params_df(
     norm of 1 + 1ulp, in which case a full re-projection would divide
     once more where the gated pass skips; the divergence is bounded at
     ~1 ulp per skipped row per epoch, far inside the trainer's ±2σ
-    quality-parity band (and the sharded≡partitioned pin runs both
-    paths through the same gate, so the pin itself is unaffected).
+    quality-parity band (the single-partition pin in tests/test_kge.py
+    checks this gated pass against a full numpy ``normalize()`` every
+    epoch at atol 1e-9).
     Treat touched_only as band-exact, not bit-exact, vs the full pass.
     The first epoch must run with touched_only=False (init rows have
     never been projected). VERDICT r11 item 2: re-normalizing the full entity
@@ -955,14 +826,10 @@ def train_kge_sharded(
     adversarial_alpha: float | None = None,
     n_partitions: int = 8,
     params_init: DataFrame | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fully sharded KGE training — parameters NEVER driver-resident
-    during training (VERDICT r10 item 4: :func:`train_kge_partitioned`
-    keeps the triples on the cluster but ``collect()``s the summed
-    delta table each epoch and applies it to driver-held numpy tables,
-    so at a 100 TB triple store the entity-parameter table itself
-    outgrows the driver).
+    during training: at a 100 TB triple store the entity-parameter
+    table itself outgrows the driver, so it never leaves the cluster.
 
     The parameter state lives as a DataFrame (tbl, idx, vec) across
     epochs. Per epoch:
@@ -976,24 +843,22 @@ def train_kge_sharded(
        remap of its slice and emits sparse per-row deltas;
     3. deltas are summed Spark-side and joined back into the
        parameter DataFrame (``vec + sum(delta)/n_partitions`` —
-       unweighted model averaging, as the partitioned trainer);
+       unweighted model averaging);
     4. the translational family re-projects onto the unit ball with
        the DataFrame twin of ``normalize`` — every row on epoch 0,
        only this epoch's TOUCHED rows afterwards (exact: an untouched
        row's norm is already <= 1, where the projection is an
-       IEEE-exact identity); the lineage is truncated with an eager
-       localCheckpoint every ``checkpoint_every`` epochs; in-between
-       epochs are EAGERLY persisted (values are unchanged by the
-       cadence — it trades checkpoint block copies for cache blocks;
-       see the in-loop comment for why the persist must be eager).
+       IEEE-exact identity); each epoch ends in an eager
+       localCheckpoint that truncates the lineage.
 
-    Semantics vs :func:`train_kge_partitioned`: negative corruption
-    samples from the partition's LOCAL entity set (the shipped slice
-    is all a task can see) — the standard distributed-KGE compromise
-    (DGL-KE's per-partition negatives); with ONE partition whose
-    triples cover every entity the two trainers are numerically
-    equivalent (unit-pinned). Parity is metric-band, like every
-    stochastic trainer here (SURVEY §6).
+    Semantics: negative corruption samples from the partition's LOCAL
+    entity set (the shipped slice is all a task can see) — the
+    standard distributed-KGE compromise (DGL-KE's per-partition
+    negatives); with ONE partition whose triples cover every entity,
+    the result equals a plain numpy loop of :func:`_run_epoch` over the
+    sorted triples with the same per-epoch rng seeds (unit-pinned).
+    Parity is metric-band, like every stochastic trainer here
+    (SURVEY §6).
 
     Init: ``params_init`` defaults to a one-time driver conversion of
     the standard numpy init (:func:`params_to_df` — the same O(n_ent
@@ -1012,14 +877,7 @@ def train_kge_sharded(
 
     spark = triples_idx_df.sparkSession
     model_cls = KGE_MODELS[model]
-    kinds, row_shapes = _table_kinds(model_cls, dim)
-    complex_tables = {
-        name
-        for name, arr in _param_tables(
-            model_cls(2, 2, dim, np.random.default_rng(0))
-        ).items()
-        if np.iscomplexobj(arr)
-    }
+    kinds, row_shapes, complex_tables = _table_kinds(model_cls, dim)
     if params_init is None:
         m0 = model_cls(n_ent, n_rel, dim, np.random.default_rng(seed))
         params = params_to_df(spark, m0)
@@ -1050,7 +908,6 @@ def train_kge_sharded(
         .repartition("part")
         .persist()
     )
-    epoch_caches: list[DataFrame] = []
     # (part, tbl, idx) of every parameter row a partition needs: its
     # triples' entities for ent tables, relations for rel tables, and
     # every row of the (tiny) global tables
@@ -1230,25 +1087,7 @@ def train_kge_sharded(
             )
         else:
             params = params.drop("_upd")
-        if (epoch + 1) % checkpoint_every == 0 or epoch == epochs - 1:
-            params = params.localCheckpoint(eager=True)
-            for c in epoch_caches:
-                c.unpersist(blocking=False)
-            epoch_caches.clear()
-        else:
-            # between checkpoints: EAGERLY persisted (count forces the
-            # cache NOW, in its own job). A lazy persist here loses a
-            # race under AQE: the next epoch consumes params through
-            # two branches (cogroup input + join-back) that can run as
-            # concurrent shuffle-map stages, both finding the cache
-            # cold and both recomputing the full upstream cogroup
-            # chain — measured 48-75 s/call vs 18-27 s/call on the
-            # parity workload. Eager materialization makes cadence > 1
-            # race-free: the only thing a checkpoint adds over the
-            # cached epoch is the block copy + lineage truncation.
-            params = params.persist()
-            params.count()
-            epoch_caches.append(params)
+        params = params.localCheckpoint(eager=True)
     parts.unpersist()
     return params
 
@@ -1259,16 +1098,6 @@ def sharded_entity_embeddings(params: DataFrame, model: str) -> DataFrame:
     models export the real part, M5)."""
     tbl = "E:re" if KGE_MODELS[model].complex_entities else "E"
     return params.filter(F.col("tbl") == tbl).select("idx", "vec")
-
-
-def embeddings_to_df(
-    spark, model: _KGEModel, ents: DataFrame
-) -> DataFrame:
-    """M4: entity embedding table back to Spark as (e, vec)."""
-    vecs = model.entity_vectors()
-    rows = [(int(i), [float(x) for x in vecs[i]]) for i in range(len(vecs))]
-    vdf = spark.createDataFrame(rows, "idx int, vec array<double>")
-    return ents.join(vdf, "idx").select("e", "vec")
 
 
 class KGERecommender(Recommender):
@@ -1284,9 +1113,9 @@ class KGERecommender(Recommender):
     from one bounded Arrow collect — and leaves nothing persisted in
     Spark, and scores through ``recommend.driver_recommendations``:
     ``exact`` is ``recommend.driver_topk`` on the driver, ``lsh`` runs
-    in Spark on inputs built from the driver-held data. The partitioned
-    and sharded trainers keep the train frame and the entity vectors
-    persisted in Spark and score there (``topk_by_cosine`` or LSH).
+    in Spark on inputs built from the driver-held data. The sharded
+    trainer keeps the train frame and the entity vectors persisted in
+    Spark and scores there (``topk_by_cosine`` or LSH).
     ``scoring`` is ``exact`` or ``lsh``.
     """
 
@@ -1305,15 +1134,13 @@ class KGERecommender(Recommender):
         self.adversarial_alpha = adversarial_alpha
         # "driver" = reference-parity single-node SGD (one guarded
         # Arrow collect of the string triples, indexed on the driver —
-        # collect_triples); "partitioned" = distributed partition-wise
-        # SGD — triples never leave the cluster (train_kge_partitioned);
-        # "sharded" = partitioned SGD with the parameter tables ALSO
-        # kept as a DataFrame across epochs (train_kge_sharded — the
-        # 100 TB path where even the entity table outgrows the driver)
-        if trainer not in ("driver", "partitioned", "sharded"):
+        # collect_triples); "sharded" = partition-wise SGD with the
+        # triples AND the parameter tables kept as DataFrames across
+        # epochs (train_kge_sharded — the 100 TB path where even the
+        # entity table outgrows the driver)
+        if trainer not in ("driver", "sharded"):
             raise ValueError(
-                "trainer must be 'driver', 'partitioned' or 'sharded', "
-                f"got {trainer!r}"
+                f"trainer must be 'driver' or 'sharded', got {trainer!r}"
             )
         self.trainer = trainer
         self.n_partitions = n_partitions
@@ -1325,7 +1152,7 @@ class KGERecommender(Recommender):
 
     def train(self, train_ratings: DataFrame,
               extra_triples: DataFrame | None = None) -> "KGERecommender":
-        spark = self._spark = train_ratings.sparkSession
+        self._spark = train_ratings.sparkSession
         self._train = self._emb = self._driver = None
         train = train_ratings.select(
             F.col("user_id").cast("string").alias("user_id"),
@@ -1359,25 +1186,18 @@ class KGERecommender(Recommender):
         self._train = train
         ents, rels = index_entities(triples)
         ents, rels = ents.persist(), rels.persist()
-        if self.trainer == "sharded":
-            params = train_kge_sharded(
-                indexed_triples_df(triples, ents, rels),
-                ents.count(), rels.count(),
-                n_partitions=self.n_partitions, **hyper,
-            )
-            evec = sharded_entity_embeddings(params, self.model_name)
-            self._emb = ents.join(evec, "idx").select("e", "vec").persist()
-            return self
-        m = train_kge_partitioned(
+        params = train_kge_sharded(
             indexed_triples_df(triples, ents, rels),
             ents.count(), rels.count(),
             n_partitions=self.n_partitions, **hyper,
         )
-        self._emb = embeddings_to_df(spark, m, ents).persist()
+        evec = sharded_entity_embeddings(params, self.model_name)
+        self._emb = ents.join(evec, "idx").select("e", "vec").persist()
         return self
 
     def get_recommendations(self, k: int | None = None) -> DataFrame:
-        assert self._train is not None or self._driver is not None, "call train() first"
+        if self._train is None and self._driver is None:
+            raise RuntimeError("call train() before get_recommendations()")
         k = k or self.k
         if self._driver is not None:
             return driver_recommendations(

@@ -177,7 +177,8 @@ class Node2VecRecommender(Recommender):
         )
 
     def get_recommendations(self, k: int | None = None) -> DataFrame:
-        assert self._driver is not None, "call train() first"
+        if self._driver is None:
+            raise RuntimeError("call train() before get_recommendations()")
         return driver_recommendations(
             self._spark, *self._driver, k or self.k, self.scoring, self.all_recs
         )

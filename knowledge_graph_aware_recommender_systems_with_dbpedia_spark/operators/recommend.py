@@ -17,8 +17,8 @@ live, and the two return the same rows, bit for bit:
    Arrow collect (:func:`collect_pairs`) and
    :func:`driver_recommendations` hands Spark the ranked rows;
  * :func:`topk_by_cosine` (a crossJoin, a window and an anti-join)
-   for vectors that stay in Spark — the sharded and partitioned KGE
-   trainers, and fixed hash vectors.
+   for vectors that stay in Spark — the sharded KGE trainer, and
+   fixed hash vectors.
 
 Scale: the popularity candidate set is tiny (top-n global items) and
 broadcast; the approximate scoring path is :func:`topk_by_cosine_lsh`

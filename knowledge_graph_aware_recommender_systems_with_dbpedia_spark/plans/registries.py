@@ -59,7 +59,7 @@ def _kge(kind: str):
             n_negatives=p.get("n_negatives", 1),
             adversarial_alpha=p.get("adversarial_alpha"),
             # reference configs never set these (driver = the pykeen-
-            # parity stage); the scale trainers opt in via YAML
+            # parity stage); the sharded scale trainer opts in via YAML
             trainer=p.get("trainer", "driver"),
             n_partitions=p.get("n_partitions", 8),
         )

@@ -437,62 +437,37 @@ def _chain_df(spark, n_ent=20):
     )
 
 
-@pytest.mark.slow
-def test_partitioned_training_separates_pos_from_neg(spark):
-    """Distributed trainer (partition-wise SGD + Spark-side delta
-    aggregation) learns: positives score better than corruptions."""
-    df, pos = _chain_df(spark)
-    m = kge.train_kge_partitioned(
-        df, 20, 1, model="transe", dim=16, epochs=20, lr=0.15, seed=11,
-        n_partitions=2,
-    )
-    rng = np.random.default_rng(3)
-    neg = pos.copy()
-    neg[:, 2] = rng.integers(0, 20, len(neg))
-    keep = neg[:, 2] != pos[:, 2]
-    f_pos = m.f(pos[:, 0], pos[:, 1], pos[:, 2]).mean()
-    f_neg = m.f(neg[keep, 0], neg[keep, 1], neg[keep, 2]).mean()
-    assert f_pos < f_neg, (f_pos, f_neg)
-
-
-def test_partitioned_training_deterministic_under_repartitioning(spark):
-    """md5 partition membership + per-(seed, epoch, partition) rngs +
-    sorted local order => bit-identical results whatever the input's
-    physical layout."""
-    df, _ = _chain_df(spark)
-    kw = dict(model="transe", dim=16, epochs=3, lr=0.1, seed=11, n_partitions=3)
-    m1 = kge.train_kge_partitioned(df, 20, 1, **kw)
-    m2 = kge.train_kge_partitioned(df.repartition(7), 20, 1, **kw)
-    assert np.array_equal(m1.entity_vectors(), m2.entity_vectors())
-
-
-@pytest.mark.parametrize("model", ["rotate", "rescal"])
-def test_partitioned_trainer_complex_and_matrix_params(spark, model):
-    """Delta transport round-trips complex tables (re/im split) and
-    per-relation matrices, and training actually moves the params."""
-    df, _ = _chain_df(spark)
-    m = kge.train_kge_partitioned(
-        df, 20, 1, model=model, dim=8, epochs=3, lr=0.05, seed=11,
-        n_partitions=2,
-    )
-    fresh = kge.KGE_MODELS[model](20, 1, 8, np.random.default_rng(11))
-    assert np.isfinite(m.entity_vectors()).all()
-    assert not np.array_equal(m.entity_vectors(), fresh.entity_vectors())
+def _single_partition_reference(tri, n_ent, n_rel, model, dim, epochs, lr, seed):
+    """The sharded trainer at ONE partition, as a plain numpy loop over
+    the same SGD kernel: the numpy init, the triples in sorted order,
+    one :func:`kge._run_epoch` per epoch with the (seed, epoch,
+    partition 0) rng, then the unit-ball projection for the
+    translational family."""
+    m = kge.KGE_MODELS[model](n_ent, n_rel, dim, np.random.default_rng(seed))
+    tri = tri[np.lexsort((tri[:, 2], tri[:, 1], tri[:, 0]))]
+    for epoch in range(epochs):
+        kge._run_epoch(
+            m, tri, np.random.default_rng([seed, epoch, 0]), lr,
+            margin=1.0, batch_size=1024, n_negatives=1, adversarial_alpha=None,
+        )
+        if model in kge.TRANSLATIONAL:
+            m.normalize()
+    return m
 
 
 def test_sharded_trainer_equals_partitioned_single_partition(spark):
-    """VERDICT r10 item 4: the sharded trainer keeps the parameter
-    tables as a DataFrame across epochs (joined delta updates, DF
-    normalize) instead of driver-held numpy. With ONE partition whose
-    triples cover every entity, its local entity set == the global
-    set, so local negative sampling draws the identical rng stream and
-    the two trainers must agree numerically — pinning that the DF
-    round-trip (init -> join-update -> normalize -> export) computes
-    exactly what the numpy path computes."""
-    df, _ = _chain_df(spark)
-    kw = dict(model="transe", dim=16, epochs=3, lr=0.1, seed=11, n_partitions=1)
-    m = kge.train_kge_partitioned(df, 20, 1, **kw)
-    params = kge.train_kge_sharded(df, 20, 1, **kw)
+    """The sharded trainer keeps the parameter tables as a DataFrame
+    across epochs (joined delta updates, DF normalize) instead of
+    driver-held numpy. With ONE partition whose triples cover every
+    entity, its local entity set == the global set, so local negative
+    sampling draws the identical rng stream and it must agree with
+    the numpy single-partition loop — pinning that the DF round-trip
+    (init -> join-update -> normalize -> export) computes exactly what
+    the numpy path computes."""
+    df, pos = _chain_df(spark)
+    kw = dict(model="transe", dim=16, epochs=3, lr=0.1, seed=11)
+    m = _single_partition_reference(pos, 20, 1, **kw)
+    params = kge.train_kge_sharded(df, 20, 1, n_partitions=1, **kw)
     evec = {
         r.idx: np.array(r.vec)
         for r in kge.sharded_entity_embeddings(params, "transe").collect()
@@ -504,17 +479,17 @@ def test_sharded_trainer_equals_partitioned_single_partition(spark):
 
 
 def test_sharded_trainer_equals_partitioned_single_partition_complex(spark):
-    """VERDICT r12 item 2: the sharded≡partitioned pin for a
-    NON-translational, complex-valued model. ComplEx's parameter
-    tables ride the sharded path as :re/:im row PAIRS (delta transport
-    splits the complex delta, the export recombines) — with ONE
-    partition the local entity set equals the global set, so the DF
-    round-trip must reproduce the numpy trainer exactly on BOTH
-    components, not just the real part the recommender exports."""
-    df, _ = _chain_df(spark)
-    kw = dict(model="complex", dim=8, epochs=3, lr=0.05, seed=11, n_partitions=1)
-    m = kge.train_kge_partitioned(df, 20, 1, **kw)
-    params = kge.train_kge_sharded(df, 20, 1, **kw)
+    """The single-partition pin for a NON-translational,
+    complex-valued model. ComplEx's parameter tables ride the sharded
+    path as :re/:im row PAIRS (delta transport splits the complex
+    delta, the export recombines) — with ONE partition the local
+    entity set equals the global set, so the DF round-trip must
+    reproduce the numpy loop exactly on BOTH components, not just the
+    real part the recommender exports."""
+    df, pos = _chain_df(spark)
+    kw = dict(model="complex", dim=8, epochs=3, lr=0.05, seed=11)
+    m = _single_partition_reference(pos, 20, 1, **kw)
+    params = kge.train_kge_sharded(df, 20, 1, n_partitions=1, **kw)
     for tbl, want in (
         ("E:re", m.E.real), ("E:im", m.E.imag),
         ("R:re", m.R.real), ("R:im", m.R.imag),
@@ -698,20 +673,19 @@ def test_kge_recommender_sharded_end_to_end(spark):
     assert overlap == 0
 
 
-def test_kge_recommender_partitioned_end_to_end(spark):
-    ratings = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
-        F.col("o_custkey").alias("user_id"),
-        (F.col("o_orderkey") % 50).alias("item_id"),
-        (F.col("o_orderkey") % 5 + 1).cast("double").alias("rating"),
-    ).limit(800)
-    rec = kge.KGERecommender(
-        "transe", k=5, dim=16, epochs=2, trainer="partitioned", n_partitions=4
-    ).train(ratings)
-    recs = rec.get_recommendations()
-    assert recs.columns == ["user_id", "item_id", "rank"]
-    assert recs.groupBy("user_id").count().agg(F.max("count")).collect()[0][0] <= 5
-    overlap = recs.join(
-        ratings.select(F.col("user_id").cast("string").alias("user_id"),
-                       F.col("item_id").cast("string").alias("item_id")),
-        ["user_id", "item_id"]).count()
-    assert overlap == 0
+def test_table_kinds_core_tensor_is_global_at_any_dim():
+    """The sentinel template sizes derive from ``dim``, so no legal dim
+    collides with them: TuckER's (dim, dim, dim) core stays global at
+    dim=101, where fixed sentinels of 101 and 103 failed."""
+    kinds, shapes, complex_tables = kge._table_kinds(kge.KGE_MODELS["tucker"], 101)
+    assert kinds == {"E": "ent", "R": "rel", "Wc": "global"}
+    assert shapes["Wc"] == (101, 101) and complex_tables == set()
+    assert kge._table_kinds(kge.KGE_MODELS["complex"], 8)[2] == {"E", "R"}
+
+
+@pytest.mark.parametrize("rec", [kge.KGERecommender, Node2VecRecommender])
+def test_get_recommendations_before_train_raises(rec):
+    """An untrained recommender raises a RuntimeError, not an assert
+    that ``python -O`` strips (and that then fails on ``None``)."""
+    with pytest.raises(RuntimeError, match="call train"):
+        rec().get_recommendations()

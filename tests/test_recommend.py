@@ -112,7 +112,8 @@ def test_all_recs_rejected_on_lsh_scoring():
 
 @pytest.mark.parametrize("kwargs,allowed", [
     ({"scoring": "broadcast"}, "'exact' or 'lsh'"),
-    ({"trainer": "local"}, "'driver', 'partitioned' or 'sharded'"),
+    ({"trainer": "local"}, "'driver' or 'sharded'"),
+    ({"trainer": "partitioned"}, "'driver' or 'sharded'"),
 ])
 def test_bad_scoring_or_trainer_rejected(kwargs, allowed):
     """Config values are checked with a ValueError naming the allowed
