@@ -11,7 +11,7 @@ text analysis, streaming) the reference lacks.
 
 Everything is DataFrame/SQL-first: the "graph" is two DataFrames
 (nodes, edges), splits are deterministic hash-based lineage filters,
-metrics are window aggregations. No driver-side row loops in any hot
+metrics are one per-user aggregation. No driver-side row loops in any hot
 path.
 """
 

@@ -25,6 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import metrics as ME
 from ..operators import splits as SP
 from ..operators.graph import KGraph, build_graph
 from ..sources.typed_csv import read_typed_csv
@@ -272,48 +273,57 @@ def _run_models(models: list[dict], pairs, graph: KGraph, k: int,
                 model.train(train_df, ie)
             else:
                 model.train(train_df)
-            # metric join keys must agree in type with the test side
+            # the metric pass unions recs with test rows: one id type
             recs = model.get_recommendations(k).select(
                 F.col("user_id").cast("string").alias("user_id"),
                 F.col("item_id").cast("string").alias("item_id"),
                 "rank",
-            ).persist()
+            )
             test_m = test.select(
                 F.col("user_id").cast("string").alias("user_id"),
                 F.col("item_id").cast("string").alias("item_id"),
                 F.col("rating").cast("double").alias("rating"),
             )
-            # the recs stay cached across the metrics, so the scoring
-            # lineage runs once; released even when a metric fails
-            try:
-                fold_vals = [
-                    float(
+            # every built-in metric is a column of the one per-user pass;
+            # a plugin metric joins it as its own 1-row frame
+            scores = ME.ranking_metrics(test_m, recs, k, relevance_threshold=threshold)
+            for m in metric_names:
+                if m not in scores.columns:
+                    scores = scores.crossJoin(
                         METRICS[m](test_m, recs, k, relevance_threshold=threshold)
-                        .collect()[0]["value"]
-                        or 0.0
+                        .select(F.col("value").alias(m))
                     )
-                    for m in metric_names
-                ]
-            finally:
-                recs.unpersist()
+            row = scores.select(*metric_names).collect()[0]
+            fold_vals = [float(row[m] or 0.0) for m in metric_names]
             results[display].append(fold_vals)
             times[display].append(time.monotonic() - t0)
     return results, times
+
+
+def _check_names(kind: str, names: list[str], registry: dict) -> None:
+    """Reject names the registry lacks before any Spark work runs."""
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        raise ValueError(
+            f"unknown {kind} name(s) {unknown}; allowed: {', '.join(registry)}"
+        )
 
 
 def run_experiment(spark: SparkSession, config) -> dict:
     """Execute a full experiment; returns {model: {column: value}} as
     written to the report CSV."""
     exp = load_config(config)["experiment"]
+    ev = exp["evaluation"]
+    metric_names = list(ev.get("metrics", ["MAP", "nDCG"]))
+    _check_names("metric", metric_names, METRICS)
+    _check_names("model", [m["name"] for m in exp["models"]], MODELS)
 
     ratings, graph, items = _load_dataset(spark, exp["dataset"])
     for step in exp.get("preprocess", []) or []:
         fn = PREPROCESS[step["method"]]
         ratings = fn(ratings, **step.get("parameters", {}))
     ratings = ratings.persist()
-    ev = exp["evaluation"]
     k = ev.get("k", 5)
-    metric_names = list(ev.get("metrics", ["MAP", "nDCG"]))
     split_df = None
     try:
         split_df, pairs = _folds(ratings, exp["split"], items=items)

@@ -134,7 +134,9 @@ MODELS = {
 
 # ----------------------------------------------------------------- metrics
 
-# name -> fn(test, recs, k, relevance_threshold) -> 1-row DataFrame(value)
+# name -> fn(test, recs, k, relevance_threshold) -> 1-row DataFrame(value).
+# The built-in names are also columns of metrics.ranking_metrics, which
+# the experiment runner scores in one pass; other names run their fn.
 METRICS = {
     "MAP": ME.map_at_k,
     "nDCG": ME.ndcg_at_k,

@@ -402,3 +402,95 @@ def test_experiment_dedup_aware_split_via_yaml(spark, tmp_path):
     for r in sp_df.select("item_id", "is_test").distinct().collect():
         sides.setdefault(cl[r.item_id], set()).add(r.is_test)
     assert all(len(v) == 1 for v in sides.values())  # no cluster spans
+
+
+class _NotCalled:
+    def __init__(self, params, seed):
+        pytest.fail("the model was built before the name check")
+
+
+@pytest.mark.parametrize(
+    "field, value, allowed",
+    [("metrics", ["MAP", "nDGC"], "MAP, nDCG, MRR, HitRate"),
+     ("models", [{"name": "guard"}, {"name": "tranzE"}], "transE")],
+)
+def test_unknown_names_fail_before_spark_work(spark, tmp_path, monkeypatch, field, value, allowed):
+    """A typo in evaluation.metrics or a model name raises before any
+    Spark job, not after the split is persisted and a model trained."""
+    monkeypatch.setitem(EX.MODELS, "guard", _NotCalled)
+    cfg = _config(tmp_path, [{"name": "guard"}], tmp_path / "r.csv")
+    if field == "metrics":
+        cfg["experiment"]["evaluation"]["metrics"] = value
+    else:
+        cfg["experiment"]["models"] = value
+    _make_dataset(tmp_path)
+    sc = spark.sparkContext
+    group = f"test_names_{field}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=allowed):
+            EX.run_experiment(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_fold_metrics_are_one_action(spark, monkeypatch):
+    """One (model, fold) scores every built-in metric in one action of
+    at most 3 jobs (the by-user shuffle, the global mean, the result);
+    a plugin metric rides the same action as its own 1-row frame."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    test = spark.createDataFrame(
+        [(1, 10, 5.0), (1, 11, 3.0), (2, 20, 4.0), (3, 30, 5.0)],
+        "user_id bigint, item_id bigint, rating double",
+    )
+    recs = spark.createDataFrame(
+        [(1, 10, 1), (1, 99, 2), (1, 11, 3), (2, 21, 1), (2, 20, 2)],
+        "user_id bigint, item_id bigint, rank int",
+    )
+
+    class Fixed:
+        def __init__(self, params, seed):
+            pass
+
+        def train(self, train_df):
+            pass
+
+        def get_recommendations(self, k):
+            return recs
+
+    monkeypatch.setitem(EX.MODELS, "fixed", Fixed)
+    graph = SimpleNamespace(
+        edges=spark.createDataFrame([], "src string, dst string, edge_type string")
+    )
+
+    def run(names):
+        results, _ = EX._run_models(
+            [{"name": "fixed"}], [(test, test)], graph, 3, names, threshold=1.0, seed=1
+        )
+        return dict(zip(names, results["fixed"][0]))
+
+    sc = spark.sparkContext
+    group = "test_fold_metrics_one_action"
+    sc.setJobGroup(group, group)
+    try:
+        got = run(["MAP", "nDCG", "MRR", "HitRate"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, len(jobs)
+    assert got["MAP"] == pytest.approx(((1 / 1 + 2 / 3) / 2 + (1 / 2) / 1) / 3, abs=1e-12)
+    assert got["MRR"] == pytest.approx((1.0 + 0.5 + 0.0) / 3, abs=1e-12)
+    assert got["HitRate"] == pytest.approx(2 / 3, abs=1e-12)
+
+    monkeypatch.setitem(
+        EX.METRICS, "Const", lambda test, recs, k, relevance_threshold: (
+            test.sparkSession.range(1).select(F.lit(0.25).alias("value"))
+        ),
+    )
+    assert run(["Const", "MAP"]) == {"Const": 0.25, "MAP": got["MAP"]}

@@ -140,3 +140,111 @@ def test_auc_at_k_perfect_and_inverted(spark):
     )
     assert auc_at_k(test, top, 5).collect()[0].value == 1.0
     assert auc_at_k(test, bottom, 5).collect()[0].value == 0.0
+
+
+def _all_metrics(test, recs, k, threshold):
+    return {
+        "MAP": metrics.map_at_k(test, recs, k, relevance_threshold=threshold),
+        "nDCG": metrics.ndcg_at_k(test, recs, k, relevance_threshold=threshold),
+        "MRR": metrics.mrr_at_k(test, recs, k, relevance_threshold=threshold),
+        "HitRate": metrics.hit_rate_at_k(test, recs, k, relevance_threshold=threshold),
+        "AUC": metrics.auc_at_k(test, recs, k, relevance_threshold=threshold),
+    }
+
+
+def test_duplicated_test_row_counts_once(spark):
+    # a repeated (user, item) test row is one relevant item, not two:
+    # joins on it used to fan out and score MAP 1.5, nDCG 1.2263, AUC 1.5.
+    # nDCG takes the pair's highest rating (user 2: 4.0 over 2.0)
+    test = spark.createDataFrame(
+        [(1, 10, 5.0), (1, 10, 5.0), (2, 20, 2.0), (2, 20, 4.0), (2, 21, 4.0)],
+        "user_id int, item_id int, rating double",
+    )
+    recs = spark.createDataFrame(
+        [(1, 10, 1), (1, 11, 2), (2, 21, 1), (2, 20, 2)],
+        "user_id int, item_id int, rank int",
+    )
+    got = {m: df.collect()[0].value for m, df in _all_metrics(test, recs, 5, 1.0).items()}
+    assert got["MAP"] == pytest.approx((1.0 + 1.0) / 2, abs=1e-12)
+    ndcg2 = (4 / math.log2(2) + 4 / math.log2(3)) / (4 / math.log2(2) + 4 / math.log2(3))
+    assert got["nDCG"] == pytest.approx((1.0 + ndcg2) / 2, abs=1e-12)
+    assert got["MRR"] == pytest.approx(1.0, abs=1e-12)
+    assert got["HitRate"] == pytest.approx(1.0, abs=1e-12)
+    assert got["AUC"] == pytest.approx(1.0, abs=1e-12)  # user 2 has no negative
+
+
+def test_evaluate_accepts_every_metric_and_rejects_unknown(fixture):
+    test, recs = fixture
+    with pytest.raises(ValueError, match="allowed: map, ndcg, mrr, hitrate, auc"):
+        metrics.evaluate(test, recs, {"P@5": {"metric": "precision", "k": 5}})
+    suite = {f"{m}@5": {"metric": m, "k": 5, "relevance_threshold": 1.0}
+             for m in ("map", "ndcg", "mrr", "hitrate", "auc")}
+    got = {r.metric: r.value for r in metrics.evaluate(test, recs, suite).collect()}
+    want = metrics.ranking_metrics(test, recs, 5, relevance_threshold=1.0).collect()[0]
+    assert got == {f"{c.lower()}@5": want[c] for c in metrics.METRIC_COLUMNS}
+
+
+def _reference(test_rows, rec_rows, k, threshold):
+    """Pure-Python MAP/nDCG/MRR/HitRate/AUC at k, loop by loop, following
+    the rules of the metrics module docstring."""
+    rel = {}
+    for u, i, r in test_rows:
+        if r >= threshold:
+            items = rel.setdefault(u, {})
+            items[i] = max(r, items.get(i, r))
+    slates = {}
+    for u, i, rank in rec_rows:
+        if rank <= k:
+            slates.setdefault(u, []).append((rank, i))
+    per = {m: [] for m in ("MAP", "nDCG", "MRR", "HitRate", "AUC")}
+    for u, items in rel.items():
+        slate = sorted(slates.get(u, []))
+        hits, ap_num, seen = 0, 0.0, set()
+        for rank, i in slate:
+            if i in items and i not in seen:
+                hits += 1
+                ap_num += hits / rank
+            seen.add(i)
+        per["MAP"].append(ap_num / min(len(items), k))
+        dcg = sum(items.get(i, 0.0) / math.log2(rank + 1) for rank, i in slate)
+        ideal = sorted(items.values(), reverse=True)[:k]
+        idcg = sum(r / math.log2(p + 2) for p, r in enumerate(ideal))
+        per["nDCG"].append(dcg / idcg if idcg > 0 else 0.0)
+        pos = [rank for rank, i in slate if i in items]
+        per["MRR"].append(1.0 / pos[0] if pos else 0.0)
+        per["HitRate"].append(1.0 if pos else 0.0)
+        n, npos = len(slate), len(pos)
+        if npos and n - npos:
+            per["AUC"].append((npos * n - sum(pos) - npos * (npos - 1) / 2) / (npos * (n - npos)))
+    return {m: sum(v) / len(v) if v else None for m, v in per.items()}
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_one_pass_matches_python_reference(spark, seed, id_type):
+    import random
+
+    rng = random.Random(seed)
+
+    def ident(n):
+        return f"id{n}" if id_type == "string" else 2**40 + n
+
+    test_rows, rec_rows = [], []
+    for u in range(40):
+        # users 30-34 have recs but no test rows; 35-39 test rows but no recs
+        if u < 30 or u >= 35:
+            for _ in range(rng.randint(1, 6)):
+                # ratings 1..5 tie often; the pool of 8 items repeats
+                # (user, item) pairs, sometimes with a different rating
+                test_rows.append((ident(u), ident(rng.randrange(8)), float(rng.randint(1, 5))))
+        if u < 35:
+            for rank in range(1, rng.randint(0, 8) + 1):
+                rec_rows.append((ident(u), ident(rng.randrange(8)), rank))
+    schema = f"user_id {id_type}, item_id {id_type}"
+    test = spark.createDataFrame(test_rows, f"{schema}, rating double")
+    recs = spark.createDataFrame(rec_rows, f"{schema}, rank int")
+    for k in (3, 10):  # shorter and longer than the 0-8 item slates
+        got = metrics.ranking_metrics(test, recs, k, relevance_threshold=3.0).collect()[0]
+        want = _reference(test_rows, rec_rows, k, 3.0)
+        for m, v in want.items():
+            assert got[m] == pytest.approx(v, abs=1e-12), (m, k)
